@@ -22,8 +22,8 @@ object TimeQuery {
           case _ => sys.error(s"SPARK_GRAFT_SET: segment without '=': '$kv'")
         }
       })
-    // opt-in per-job timing (same knob as ProfileRetract): job wall time,
-    // stage names and task counts, so a slow query decomposes from the log
+    // opt-in per-job timing: job wall time, stage names and task counts,
+    // so a slow query decomposes from the log
     if (sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")) {
       val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -11702,12 +11702,17 @@ object Native {
     "graft_top_centroids" -> (exprs => TopCentroids(exprs(0),
       floatSeqSeqLit(exprs(1), "centroids"), intLit(exprs(2), "nprobe"))))
 
+  /** Registers every native function into `spark`'s session registry,
+    * skipping names the registry already holds: callers may register once
+    * per query, and a repeat call replaces nothing (so logs no "replaced a
+    * previously registered function" WARN per function). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     // NB: Spark 4 validates the source string — "built-in" (with hyphen) is
     // the accepted value; "builtin" throws at registration time.
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 

@@ -564,11 +564,13 @@ object Dedup {
   /** Hamming-banded near-dup over a PRECOMPUTED signature relation — the
     * banding/skew-guard/verify core of [[simhash]], factored out so any
     * bit-signature modality plugs in: text simhash ([[simhash]]),
-    * perceptual image hashes ([[Multimodal.imageNearDup]] over
-    * [[Native.DHash64]]), audio chromaprints. Same pigeonhole guarantee
-    * (hamming ≤ maxHamming ⇒ some band equal — lossless recall), same
-    * band-key ceiling and `corpusSize` refusal contract documented on
-    * [[simhash]].
+    * perceptual image hashes ([[Multimodal.imageNearDupSig]] over
+    * [[Native.DHash64]]), audio envelopes ([[Multimodal.audioNearDupSig]]),
+    * video clip signatures ([[Multimodal.videoNearDup]]); [[signedNearDup]]
+    * builds the signature relation from a row set and a signature Column.
+    * Same pigeonhole guarantee (hamming ≤ maxHamming ⇒ some band equal —
+    * lossless recall), same band-key ceiling and `corpusSize` refusal
+    * contract documented on [[simhash]].
     *
     * @param sigs (id, sig) — sig LONG when sigBits = 64, ARRAY<LONG>
     *             (length sigBits/64) otherwise */
@@ -629,6 +631,17 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
+
+  /** [[hammingNearDup]] over `rows` (id, …) signed by `sig`, a Column over
+    * `rows`' columns (e.g. `Multimodal.imageNearDupSig(Multimodal
+    * .pngDecodeLuma(col("png")), 9, 8)`). Rows whose signature is NULL —
+    * undecodable, corrupt or too-short payloads — never pair: they drop at
+    * the scan, before any shuffle. */
+  def signedNearDup(rows: DataFrame, sig: Column, maxHamming: Int,
+      maxBucketSize: Int = 64, sigBits: Int = 64): DataFrame =
+    hammingNearDup(
+      rows.select(col("id"), sig.as("sig")).filter(col("sig").isNotNull),
+      maxHamming, maxBucketSize, sigBits)
 
   /** Embedding-cosine near-dup pairs, blocked on IVF (k-means) centroid
     * buckets: each vector is assigned its `nprobe` nearest centroids

@@ -739,30 +739,19 @@ object Multimodal {
   def dHash(grayscale: Column, width: Int, height: Int): Column =
     graft.functions.Native.dhash(grayscale, width, height)
 
-  /** Image near-dup at corpus scale: [[dHash]] per image, then the shared
-    * Hamming-banded LSH core ([[Dedup.hammingNearDup]] — pigeonhole
-    * banding, hot-bucket skew guard, exact Hamming verify). Emits
-    * (id_a, id_b, hamming) pairs with hamming ≤ `maxHamming`; corrupt
-    * bitmaps (NULL dhash) never pair. The signature is 8 bytes/image, so
-    * a billion-image corpus bands over 8 GB of signatures — the pixel
-    * payloads never enter any shuffle.
-    *
-    * @param images (id, img BINARY) — img a width×height grayscale bitmap */
-  def imageNearDup(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"), imageNearDupSig(col("img"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** The per-image signature [[imageNearDup]] bands on, as a bare column
-    * expression (opaque-wrapped like every near-dup sig — the decode
-    * chain must not be duplicated below exchanges). Exposed so pipelines
+  /** Image near-dup signature: [[dHash]] of a `width`×`height` grayscale
+    * bitmap, opaque-wrapped like every near-dup sig (the decode chain must
+    * not be duplicated below exchanges). Real payloads compose it with a
+    * luma decoder — [[pngDecodeLuma]], [[jpegDecodeLuma]],
+    * [[webpDecodeLuma]], [[gifDecodeLuma]], [[bmpDecodeLuma]] or
+    * [[tiffDecodeLuma]] — and band it with
+    * [[graft.operators.Dedup.signedNearDup]] (pigeonhole banding, hot-bucket
+    * skew guard, exact Hamming verify). Undecodable payloads (NULL luma ⇒
+    * NULL sig) drop at the scan, before any shuffle; only the 8-byte
+    * signatures band, so a billion-image corpus bands over 8 GB. Pipelines
     * whose duplicate ids share payload BYTES bit-for-bit can sign each
     * distinct payload ONCE and fan the ids out at the 8-byte signature
-    * level, instead of decoding the same bytes once per id (guide §8:
-    * every pass but one operates on a lightweight proxy). Feed the
-    * signed relation to [[graft.operators.Dedup.hammingNearDup]]. */
+    * level, instead of decoding the same bytes once per id. */
   def imageNearDupSig(img: Column, width: Int, height: Int): Column =
     graft.functions.Native.opaque(dHash(img, width, height))
 
@@ -827,27 +816,6 @@ object Multimodal {
       filterMode: Int = 0, stored: Boolean = false, alpha: Boolean = false): Column =
     graft.functions.Native.pngEncodeRgb(pixels, width, filterMode, stored, alpha)
 
-  /** Image near-dup on REAL PNG payloads, end-to-end: [[pngDecodeLuma]]
-    * → [[dHash]] → the shared Hamming-banded LSH core — the composition
-    * [[imageNearDup]] runs on pre-decoded bitmaps, now from actual image
-    * bytes. Covers grayscale, truecolor (RGB/RGBA), AND paletted PNGs,
-    * interlaced or not — the full crawl-PNG population. Undecodable
-    * payloads (corrupt, non-PNG, gray+alpha/16-bit) drop at the
-    * decode stage, before any shuffle; only the 8-byte signatures band.
-    * `images` carries (id, png BINARY) of `width`×`height` images. */
-  def imageNearDupPng(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupPngSig(col("png"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupPng]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupPngSig(png: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(pngDecodeLuma(png), width, height))
-
   /** REAL WebP pixel decode to the luma plane
     * ([[graft.functions.Native.WebpLumaDecode]]). VP8L lossless: the
     * full public lossless bitstream — prefix codes, color cache, LZ77
@@ -879,22 +847,6 @@ object Multimodal {
   def webpEncodeVp8(pixels: Column, width: Column, nparts: Int = 1): Column =
     graft.functions.Native.webpVp8Encode(pixels, width, nparts)
 
-  /** [[imageNearDupPng]] on WebP payloads: [[webpDecodeLuma]] → [[dHash]]
-    * → the shared Hamming-banded LSH core. Closes the last major crawl
-    * image format that previously dropped undecoded at this tier. */
-  def imageNearDupWebp(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupWebpSig(col("webp"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupWebp]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupWebpSig(webp: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(webpDecodeLuma(webp), width, height))
-
   /** REAL GIF (87a/89a) first-frame pixel decode to the exact-integer
     * luma plane ([[graft.functions.Native.GifLumaDecode]]): block walk,
     * GIF-LZW, global/local palettes, 4-pass interlace. Animated GIFs
@@ -923,22 +875,6 @@ object Multimodal {
     * decode. Null structs for structurally-incomplete files. */
   def gifFrameCount(gif: Column): Column = graft.functions.Native.gifFrameCount(gif)
   def gifLoopCount(gif: Column): Column = graft.functions.Native.gifLoopCount(gif)
-
-  /** [[imageNearDupPng]] on GIF payloads: [[gifDecodeLuma]] → [[dHash]]
-    * → the shared Hamming-banded LSH core. With PNG, JPEG, WebP and GIF
-    * this tier now covers the four most common crawl image formats. */
-  def imageNearDupGif(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupGifSig(col("gif"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupGif]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupGifSig(gif: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(gifDecodeLuma(gif), width, height))
 
   /** REAL BMP pixel decode to the exact-integer luma plane ([[graft
     * .functions.Native.BmpLumaDecode]]): 1/2/4/8-bit palette, 24/32-bit
@@ -972,21 +908,6 @@ object Multimodal {
   def bmpEncodeGray8(pixels: Column, width: Column, topDown: Boolean = false,
       rle: Boolean = false, os2: Boolean = false): Column =
     graft.functions.Native.bmpEncodeGray8(pixels, width, topDown, rle, os2)
-
-  /** [[imageNearDupPng]] on BMP payloads: [[bmpDecodeLuma]] → [[dHash]]
-    * → the shared Hamming-banded LSH core. */
-  def imageNearDupBmp(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupBmpSig(col("bmp"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupBmp]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupBmpSig(bmp: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(bmpDecodeLuma(bmp), width, height))
 
   /** REAL TIFF pixel decode to the exact-integer luma plane
     * ([[graft.functions.Native.TiffLumaDecode]]): both byte orders,
@@ -1044,21 +965,6 @@ object Multimodal {
   def tiffJpegEncode(jpeg: Column, bigEndian: Boolean = false,
       split: Boolean = false): Column =
     graft.functions.Native.tiffJpegEncode(jpeg, bigEndian, split)
-
-  /** [[imageNearDupPng]] on TIFF payloads: [[tiffDecodeLuma]] → [[dHash]]
-    * → the shared Hamming-banded LSH core. */
-  def imageNearDupTiff(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupTiffSig(col("tiff"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupTiff]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupTiffSig(tiff: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(tiffDecodeLuma(tiff), width, height))
 
   /** REAL baseline-JPEG pixel decode ([[graft.functions.Native
     * .JpegGray8Decode]]): single-component (grayscale) SOF0 JPEG bytes →
@@ -1119,26 +1025,6 @@ object Multimodal {
   def jpegEncodeYccDc(pixels: Column, width: Column,
       hSamp: Int, vSamp: Int, cb: Int = 128, cr: Int = 128): Column =
     graft.functions.Native.jpegEncodeYccDc(pixels, width, hSamp, vSamp, cb, cr)
-
-  /** Image near-dup on REAL JPEG payloads, end-to-end: [[jpegDecodeLuma]]
-    * → [[dHash]] → the shared Hamming-banded LSH core ([[imageNearDupPng]]'s
-    * exact shape on the other crawl format). Decodes the luma plane of
-    * grayscale AND color baseline JPEGs — the full crawl-image population
-    * — skipping all chroma IDCT/upsampling work (dHash only reads
-    * luminance). Undecodable payloads drop at the decode stage, before
-    * any shuffle; only 8-byte signatures band. */
-  def imageNearDupJpeg(images: DataFrame, width: Int, height: Int,
-      maxHamming: Int = 2, maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      images.select(col("id"),
-        imageNearDupJpegSig(col("jpeg"), width, height).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[imageNearDupJpeg]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def imageNearDupJpegSig(jpeg: Column, width: Int, height: Int): Column =
-    graft.functions.Native.opaque(dHash(jpegDecodeLuma(jpeg), width, height))
 
   /** Frame-sample positions for a media payload of `durationMs`, every
     * `everyMs` — the pure-Spark plumbing of a video frame sampler (the
@@ -1291,10 +1177,8 @@ object Multimodal {
     require(maxHamming + 1 >= nSample,
       s"maxHamming must be >= nSample - 1 so every band fits one 64-bit word " +
         s"(got maxHamming=$maxHamming, nSample=$nSample)")
-    Dedup.hammingNearDup(
-      clips.select(col("id"),
-        videoNearDupSig(col("avi"), width, height, nSample).as("sig"))
-        .filter(col("sig").isNotNull),
+    Dedup.signedNearDup(clips,
+      videoNearDupSig(col("avi"), width, height, nSample),
       maxHamming, maxBucketSize, sigBits = 64 * nSample)
   }
 
@@ -1310,26 +1194,16 @@ object Multimodal {
   def wavEnvelope(wav: Column, nBuckets: Int = 72): Column =
     graft.functions.Native.wavEnvelope(wav, nBuckets)
 
-  /** Audio near-dup on REAL WAV payloads, end-to-end — the AUDIO sibling
-    * of [[imageNearDupPng]]/[[imageNearDupJpeg]]: decode the PCM stream
-    * into a 72-bucket energy envelope ([[wavEnvelope]]), hash the
-    * envelope as a 9×8 bitmap ([[dHash]] — one grid cell per bucket, so
-    * the signature reacts to the loudness CONTOUR, not absolute gain
-    * bytes), then the shared Hamming-banded LSH core. Catches re-encoded
-    * or re-keyed copies of the same recording (same contour); it is a
-    * duplicate detector, not a cover-song matcher. Undecodable or
-    * too-short clips drop at the decode stage, before any shuffle; only
-    * 8-byte signatures band. Scale shape: identical to the image tiers —
-    * map-side decode fused into the scan, ONE signature-keyed shuffle. */
-  def audioNearDup(clips: DataFrame, maxHamming: Int = 2,
-      maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      clips.select(col("id"), audioNearDupSig(col("wav")).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[audioNearDup]]'s signature expression (see [[imageNearDupSig]] for
-    * the sign-once contract). */
+  /** Audio near-dup signature, the AUDIO sibling of [[imageNearDupSig]]:
+    * decode a PCM WAV into a 72-bucket energy envelope ([[wavEnvelope]]),
+    * hash the envelope as a 9×8 bitmap ([[dHash]] — one grid cell per
+    * bucket, so the signature reacts to the loudness CONTOUR, not absolute
+    * gain bytes). Band it with [[graft.operators.Dedup.signedNearDup]]:
+    * it catches re-encoded or re-keyed copies of the same recording (same
+    * contour); it is a duplicate detector, not a cover-song matcher. FLAC
+    * payloads sign as `audioNearDupSig(flacDecodeWav(flac))`, so a WAV and
+    * its lossless FLAC encode hash identically. Undecodable or too-short
+    * clips sign NULL and drop at the scan. */
   def audioNearDupSig(wav: Column): Column =
     graft.functions.Native.opaque(dHash(wavEnvelope(wav, 72), 9, 8))
 
@@ -1382,24 +1256,6 @@ object Multimodal {
   def flacEncodePcm16(samples: Column, channels: Column,
       rate: Int, blockSize: Int = 1024): Column =
     graft.functions.Native.flacEncodePcm16(samples, channels, rate, blockSize)
-
-  /** [[audioNearDup]] on REAL FLAC payloads: frame decode → PCM16 WAV →
-    * the SAME 72-bucket envelope → dHash → Hamming-banded LSH core, so
-    * the audio tier's pair semantics are identical across WAV and FLAC
-    * (a WAV and its lossless FLAC encode hash identically — that is the
-    * point). Undecodable or out-of-contract clips drop at the decode
-    * stage, before any shuffle. */
-  def audioNearDupFlac(clips: DataFrame, maxHamming: Int = 2,
-      maxBucketSize: Int = 64): DataFrame =
-    Dedup.hammingNearDup(
-      clips.select(col("id"), audioNearDupFlacSig(col("flac")).as("sig"))
-        .filter(col("sig").isNotNull),
-      maxHamming, maxBucketSize)
-
-  /** [[audioNearDupFlac]]'s signature expression (see [[imageNearDupSig]]
-    * for the sign-once contract). */
-  def audioNearDupFlacSig(flac: Column): Column =
-    graft.functions.Native.opaque(dHash(wavEnvelope(flacDecodeWav(flac), 72), 9, 8))
 
   /** Audio-quality gate — the per-clip screen a speech/multimodal
     * pipeline runs BEFORE paying for transcription or feature

@@ -236,6 +236,25 @@ class FuncsSpec extends AnyFunSuite {
     }
   }
 
+  test("Native.register is idempotent: a repeat call replaces nothing and logs no replacement WARN") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger, appender, config}
+    val s = spark.newSession() // fresh registry: the first call registers every graft_ name
+    graft.functions.Native.register(s)
+    val reg = s.sessionState.functionRegistry
+    val infos = reg.listFunction().filter(_.funcName.startsWith("graft_"))
+      .map(id => id -> reg.lookupFunction(id).get)
+    val logger = org.apache.logging.log4j.LogManager.getLogger(reg.getClass.getName).asInstanceOf[CoreLogger]
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new appender.AbstractAppender("probe", null, null, true, config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    probe.start(); logger.addAppender(probe)
+    try graft.functions.Native.register(s) finally { logger.removeAppender(probe); probe.stop() }
+    assert(logger.isWarnEnabled && infos.size >= 70)
+    assert(infos.forall { case (id, info) => reg.lookupFunction(id).get eq info })
+    assert(!logged.toArray.exists(_.toString.contains("replaced a previously registered")))
+  }
+
   test("winnow fingerprints overlap on shared substrings, not on disjoint docs") {
     val shared = (1 to 20).map(i => s"s$i").mkString(" ")
     val a = s"intro words here $shared trailing alpha"

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Multimodal
+import graft.operators.{Dedup, Multimodal}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -2158,7 +2158,8 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, clip(6)), (4L, clip(7)),
       (5L, "not flac".getBytes("UTF-8"))) // drops at decode
       .toDF("id", "flac")
-    val pairs = Multimodal.audioNearDupFlac(rows)
+    val pairs = Dedup.signedNearDup(rows,
+      Multimodal.audioNearDupSig(Multimodal.flacDecodeWav($"flac")), maxHamming = 2)
       .select($"id_a", $"id_b", $"hamming").as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
   }
@@ -2917,7 +2918,8 @@ class MultimodalSpec extends AnyFunSuite {
     val hashed = rows.select(Multimodal.dHash($"img", 9, 8).as("h"))
       .as[Option[Long]].collect()
     assert(hashed.count(_.isEmpty) == 1)
-    assert(Multimodal.imageNearDup(rows, 9, 8).isEmpty) // nothing pairs
+    assert(Dedup.signedNearDup(rows, Multimodal.imageNearDupSig($"img", 9, 8),
+      maxHamming = 2).isEmpty) // nothing pairs
   }
 
   test("imageNearDup pairs bit-identical planted copies at hamming 0, nothing else") {
@@ -2927,7 +2929,7 @@ class MultimodalSpec extends AnyFunSuite {
       }
     }
     val all = (base ++ base.map { case (id, px) => (id + 1000L) -> px }).toDF("id", "img")
-    val got = Multimodal.imageNearDup(all, 9, 8, maxHamming = 2)
+    val got = Dedup.signedNearDup(all, Multimodal.imageNearDupSig($"img", 9, 8), maxHamming = 2)
       .select($"id_a", $"id_b", $"hamming").as[(Long, Long, Int)].collect().toSet
     assert(got == (0L until 40L).map(id => (id, id + 1000L, 0)).toSet, got.toString)
   }
@@ -3060,12 +3062,13 @@ class MultimodalSpec extends AnyFunSuite {
       .toDF("id", "px")
       .select($"id",
         Multimodal.pngEncodeGray8($"px", lit(9), filterMode = -1, stored = false).as("png"))
-    val pairs = Multimodal.imageNearDupPng(imgs, 9, 8, maxHamming = 2)
+    val sig = Multimodal.imageNearDupSig(Multimodal.pngDecodeLuma($"png"), 9, 8)
+    val pairs = Dedup.signedNearDup(imgs, sig, maxHamming = 2)
       .as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
     // a corrupt payload drops at decode, silently
     val withBad = imgs.union(Seq((9L, "nope".getBytes("UTF-8"))).toDF("id", "png"))
-    val pairs2 = Multimodal.imageNearDupPng(withBad, 9, 8, maxHamming = 2)
+    val pairs2 = Dedup.signedNearDup(withBad, sig, maxHamming = 2)
       .as[(Long, Long, Int)].collect().toSet
     assert(pairs2 == Set((1L, 2L, 0)))
   }
@@ -3585,7 +3588,8 @@ class MultimodalSpec extends AnyFunSuite {
     val rows = Seq((1L, img(1)), (2L, img(1)), (3L, img(3)), (4L, img(4)))
       .toDF("id", "px")
       .select($"id", Multimodal.webpEncodeVp8l($"px", lit(9)).as("webp"))
-    val pairs = Multimodal.imageNearDupWebp(rows, 9, 8, maxHamming = 2)
+    val pairs = Dedup.signedNearDup(rows,
+      Multimodal.imageNearDupSig(Multimodal.webpDecodeLuma($"webp"), 9, 8), maxHamming = 2)
       .select($"id_a", $"id_b", $"hamming".cast("bigint"))
       .as[(Long, Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L, 0L)))
@@ -3692,7 +3696,8 @@ class MultimodalSpec extends AnyFunSuite {
       .select($"id",
         Multimodal.pngEncodeRgb($"px", lit(9), filterMode = -1, stored = false,
           alpha = true).as("png"))
-    val pairs = Multimodal.imageNearDupPng(imgs, 9, 8, maxHamming = 2)
+    val pairs = Dedup.signedNearDup(imgs,
+      Multimodal.imageNearDupSig(Multimodal.pngDecodeLuma($"png"), 9, 8), maxHamming = 2)
       .as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
   }
@@ -4101,7 +4106,8 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, jpegOf(202)), (4L, jpegOf(303)),
       (5L, "corrupt".getBytes("UTF-8"))) // drops at decode, never pairs
       .toDF("id", "jpeg")
-    val pairs = Multimodal.imageNearDupJpeg(imgs, 72, 64, maxHamming = 2)
+    val pairs = Dedup.signedNearDup(imgs,
+      Multimodal.imageNearDupSig(Multimodal.jpegDecodeLuma($"jpeg"), 72, 64), maxHamming = 2)
       .select($"id_a", $"id_b", $"hamming").as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
   }
@@ -4281,7 +4287,8 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, colorJpegOf(8)), (4L, colorJpegOf(9)),
       (5L, "corrupt".getBytes("UTF-8")))
       .toDF("id", "jpeg")
-    val pairs = Multimodal.imageNearDupJpeg(imgs, 144, 128, maxHamming = 2)
+    val pairs = Dedup.signedNearDup(imgs,
+      Multimodal.imageNearDupSig(Multimodal.jpegDecodeLuma($"jpeg"), 144, 128), maxHamming = 2)
       .select($"id_a", $"id_b", $"hamming").as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
   }
@@ -4397,7 +4404,7 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, clipOf(22)), (4L, clipOf(33)),
       (5L, "static".getBytes("UTF-8"))) // undecodable: drops before the shuffle
       .toDF("id", "wav")
-    val pairs = Multimodal.audioNearDup(clips, maxHamming = 2)
+    val pairs = Dedup.signedNearDup(clips, Multimodal.audioNearDupSig($"wav"), maxHamming = 2)
       .select($"id_a", $"id_b", $"hamming").as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 0)))
   }

@@ -578,12 +578,14 @@ class OperatorsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, dir)
     val got = Dedup.ngramJaccard(docs, n = 3, threshold = 0.5)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    // brute-force oracle: full cross join + exact Jaccard (sf0.001 is small)
-    def side(id: String, t: String) = docs.select($"doc_id".as(id), $"text".as(t))
-    val brute = Dedup.jaccardNgram(
-      side("id_a", "ta").join(side("id_b", "tb"), $"id_a" < $"id_b"), "ta", "tb", 3)
-      .filter($"jaccard" >= 0.5)
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+    // brute-force oracle: each doc's distinct 3-shingles collected once, then
+    // exact all-pairs Jaccard on the driver, same double division (sf0.001 is small)
+    val sh = docs.select($"doc_id", array_distinct(graft.functions.Funcs.wordShingles(
+      graft.functions.Funcs.tokens($"text"), 3))).as[(Long, Seq[String])].collect()
+    assert(sh.forall(_._2 != null), "a doc's shingle array is null")
+    val sets = sh.map { case (id, a) => (id, a.toSet) }
+    val brute = (for ((a, sa) <- sets; (b, sb) <- sets if a < b &&
+      (sa & sb).size.toDouble / (sa | sb).size.toDouble >= 0.5) yield (a, b)).toSet
     assert(got == brute, s"prefix filter lost ${brute.diff(got).size}, invented ${got.diff(brute).size}")
     assert(brute.nonEmpty) // the corpus plants near-dups; the test must bite
   }
