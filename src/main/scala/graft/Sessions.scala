@@ -11,9 +11,38 @@ import org.apache.spark.sql.SparkSession
   * place.
   */
 object Sessions {
+  /** Every `file:` path on [[graft.io.NioLocalFileSystem]] (FileSystem API)
+    * and [[graft.io.NioLocalFs]] (FileContext API): the stock local
+    * filesystem, with its permission and stat calls made through `java.nio`.
+    *
+    * Why: without Hadoop's native library (`libhadoop`), the stock local
+    * filesystem forks `chmod`, `ls -ld` and `readlink` from the driver JVM
+    * for every permission set, status read and `FileContext.rename`. A
+    * streaming trigger writes its offset log, state-store deltas, their
+    * checksum files and the commit log through that path, each an atomic
+    * write (create, then a rename). Measured on a 4-core host from a 3 GB
+    * heap, 200-byte files, medians of 200: a checkpoint atomic write 41-52 ms
+    * stock vs 0.9-1.4 ms here (FileContext create 8.7-11.2 vs 0.27 ms,
+    * `rename(OVERWRITE)` 40-41 vs 0.4-0.5 ms), `FileSystem.create` 9.2-10.3
+    * vs 0.16-0.21 ms, a status with its permission 4.9-5.2 vs 0.03 ms. On
+    * the streaming benchmark a trigger's offset-log write went 55 → 4 ms,
+    * its commit-log write 80 → 4 ms and its state commit 428 → 25 ms.
+    * Everything above the raw calls — the `.crc` files, the
+    * FileContext-based checkpoint manager with its no-overwrite rename, the
+    * v1 committer — is unchanged.
+    *
+    * Shared with the test session, so the suite runs on the same
+    * filesystem. The FileSystem cache is per JVM and keyed by scheme, not
+    * by configuration: a process that reads `file:` through Hadoop before
+    * building its first session keeps the stock class. */
+  val localFs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.NioLocalFs].getName)
+
   /** local[cpus] session with the harness invariants: shuffle parallelism
     * = cpus (not the 200 default), AQE on, UTC session timezone, legacy
-    * nanos-as-long parquet reads, native functions registered. */
+    * nanos-as-long parquet reads, fork-free local filesystem ([[localFs]]),
+    * native functions registered. */
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -88,6 +117,7 @@ object Sessions {
       // the whole harness's classes; cost is classloader metadata, not
       // heap at this scale. Static conf — must be set at session build.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config(localFs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.functions.Native.register(s)

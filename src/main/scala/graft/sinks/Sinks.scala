@@ -1,7 +1,8 @@
 package graft.sinks
 
 import java.sql.Timestamp
-import scala.collection.concurrent.TrieMap
+import java.util.concurrent.ConcurrentSkipListMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -58,7 +59,9 @@ object Sinks {
     * changes.
     */
   final class WindowCountStore {
-    private val store = TrieMap.empty[(String, Long), Long]
+    /** Ordered by (key, window_start), so a fetch is one range read of its
+      * key's windows, not a scan of every entry. */
+    private val store = new ConcurrentSkipListMap[(String, Long), Long](Ordering.Tuple2[String, Long])
 
     /** Upsert one micro-batch delta: rows of
       * (window_start TIMESTAMP, key STRING, cnt BIGINT). The delta is
@@ -72,15 +75,13 @@ object Sinks {
     /** ≙ `windowStore.fetch(key, from, to)` — counts for `key` whose
       * window start lies in [from, to], sorted by window start. */
     def fetch(key: String, from: Timestamp, to: Timestamp): Seq[(Timestamp, Long)] =
-      store.iterator
-        .collect { case ((k, ws), cnt) if k == key && ws >= from.getTime && ws <= to.getTime =>
-          (new Timestamp(ws), cnt)
-        }
-        .toSeq.sortBy(_._1.getTime)
+      if (from.getTime > to.getTime) Seq.empty
+      else store.subMap((key, from.getTime), true, (key, to.getTime), true).asScala.iterator
+        .map { case ((_, ws), cnt) => (new Timestamp(ws), cnt) }.toSeq
 
     /** All materialized (key, window_start, cnt) triples (test surface). */
     def snapshot(): Seq[(String, Timestamp, Long)] =
-      store.iterator.map { case ((k, ws), c) => (k, new Timestamp(ws), c) }.toSeq
+      store.asScala.iterator.map { case ((k, ws), c) => (k, new Timestamp(ws), c) }.toSeq
   }
 
   /** Attach a [[WindowCountStore]] to an update-mode windowed aggregate

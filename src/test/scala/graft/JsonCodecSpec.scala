@@ -138,6 +138,39 @@ class JsonCodecSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("window store fetch is a range read: equals a brute-force filter, inclusive bounds, under a concurrent upsert") {
+    val base = ts("2025-01-01 10:00:00").getTime
+    def at(minute: Int) = base + minute * 60000L
+    def batch(keys: Seq[String], minutes: Range, cnt: Long) =
+      (for (k <- keys; m <- minutes) yield (new java.sql.Timestamp(at(m)), k, cnt))
+        .toDF("window_start", "key", "cnt")
+    // keys that prefix one another, so one key's range must not reach the next
+    val keys = Seq("1", "10", "107", "2", "")
+    val store = new Sinks.WindowCountStore
+    store.upsert(batch(keys, 0 until 20, 1L))
+    def got(key: String, from: Long, to: Long) =
+      store.fetch(key, new java.sql.Timestamp(from), new java.sql.Timestamp(to)).map { case (w, c) => (w.getTime, c) }
+    def brute(key: String, from: Long, to: Long) =
+      store.snapshot().collect { case (k, w, c) if k == key && w.getTime >= from && w.getTime <= to => (w.getTime, c) }
+        .sortBy(_._1)
+    val probes = for (key <- keys :+ "absent"; from <- Seq(-1, 0, 5, 19, 20); to <- Seq(-1, 0, 5, 19, 25))
+      yield (key, at(from), at(to))
+    probes.foreach { case (k, f, t) => assert(got(k, f, t) == brute(k, f, t), (k, f, t)) }
+    assert(got("10", at(5), at(5)) == Seq((at(5), 1L)))
+    assert(got("10", at(6), at(5)).isEmpty)
+    // readers fetch while a batch rewrites windows 0-19 and adds 20-29
+    val writer = new Thread(() => store.upsert(batch(keys, 0 until 30, 2L)))
+    writer.start()
+    while (writer.isAlive) probes.foreach { case (k, f, t) =>
+      val r = got(k, f, t)
+      assert(r.map(_._1) == r.map(_._1).sorted.distinct)
+      assert(r.forall { case (w, c) => w >= f && w <= t && (c == 1L || c == 2L) })
+    }
+    writer.join()
+    probes.foreach { case (k, f, t) => assert(got(k, f, t) == brute(k, f, t), (k, f, t)) }
+    assert(got("107", at(0), at(29)).map(_._2) == Seq.fill(30)(2L))
+  }
+
   test("parquet window store: storage-backed fetch matches the heap store live, prunes buckets, survives compaction") {
     val in = MemoryStream[(String, java.sql.Timestamp)]
     val agg = StreamOps.tumblingCount(in.toDF().toDF("key", "eventTime"), "1 minute")

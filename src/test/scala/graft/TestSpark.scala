@@ -12,6 +12,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(Sessions.localFs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.functions.Native.register(s)
