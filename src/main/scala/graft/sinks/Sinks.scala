@@ -86,15 +86,74 @@ object Sinks {
 
   /** Attach a [[WindowCountStore]] to an update-mode windowed aggregate
     * (columns `window_start`, `key`, `cnt`): every trigger's changelog is
-    * upserted into the store while the query runs. Returns the started
-    * query; callers own its lifecycle. */
+    * upserted into the store while the query runs, one trigger per input
+    * chunk ([[OneBatchPerChunk]]). Returns the started query; callers own
+    * its lifecycle. */
   def interactiveWindowCounts(aggregated: DataFrame, store: WindowCountStore,
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    aggregated.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) => store.upsert(batch) }
-      .start()
+    startOneBatchPerChunk(aggregated, trigger) { (batch, _) => store.upsert(batch) }
+
+  /** The SQL confs the window-store sinks start their queries with, so
+    * each input chunk runs exactly one micro-batch:
+    *  - `noDataMicroBatches.enabled = false`: no watermark-only batch after
+    *    a data batch. In update mode that batch emits nothing; it only
+    *    evicts windows the watermark has closed. Here a closed window is
+    *    evicted at the next data batch instead, which is Kafka Streams'
+    *    stream-time behaviour (stream time moves only when a record
+    *    arrives), and the reference never runs a batch without input.
+    *  - `statefulOperator.allowMultiple = false`: one global watermark per
+    *    batch, used both to drop late rows and to evict. With the default
+    *    per-operator propagation a batch drops late rows at the PREVIOUS
+    *    batch's watermark; without the watermark-only batch in between,
+    *    that is the watermark from two chunks back, which would count rows
+    *    whose window has already closed (and re-create evicted windows at
+    *    a partial count). With the single watermark a row is late iff its
+    *    window ends at or before the highest event time of the earlier
+    *    chunks: exactly what the default two-batch form produces.
+    * The first conf needs the second; `JsonCodecSpec` pins the pair.
+    * State stays bounded: after a batch it holds the windows that end after
+    * the previous chunks' highest event time, i.e. this chunk's windows
+    * plus the one it shares with the chunk before.
+    *
+    * The confs are captured at `start()`: `StreamExecution` builds its
+    * watermark propagator from the session conf and clones the session
+    * when the query is created, so the running query keeps these values
+    * while the caller's session is restored straight after (see
+    * [[startOneBatchPerChunk]]). Append-mode queries keep Spark's defaults:
+    * they need the watermark-only batch to emit a closed window.
+    *
+    * One per-chunk cost remains and is Spark's: each new batch watermark
+    * compiles one Janino class, a `SpecificPredicate` over the `window`
+    * struct's end (`i.getStruct(0, 2).getLong(1) <= <watermark µs>L`),
+    * built in a state task by the watermark predicates of
+    * `StateStoreRestoreExec`/`StateStoreSaveExec`. The watermark is inlined
+    * as a literal, so the generated-class cache never hits across
+    * watermarks: `codegen_compiles` stays 1.0 per steady chunk on the
+    * e2ebench `stream_triggers` workload, 6.6–18.4 ms a compile (median
+    * 10.1 ms over the 15 batch watermarks of a seed-7 run, 4-core host). */
+  private val OneBatchPerChunk = Seq(
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+    "spark.sql.streaming.statefulOperator.allowMultiple" -> "false")
+
+  /** Starts `aggregated` in update mode with `upsert` as its
+    * `foreachBatch`, under [[OneBatchPerChunk]]. The caller's previous
+    * values (or their absence) are restored in a `finally`; the lock keeps
+    * two concurrent starts from restoring each other's values. */
+  private def startOneBatchPerChunk(aggregated: DataFrame, trigger: Trigger)(
+      upsert: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = aggregated.writeStream.outputMode(OutputMode.Update()).trigger(trigger)
+      .foreachBatch(upsert)
+    val conf = aggregated.sparkSession.conf
+    OneBatchPerChunk.synchronized {
+      val saved = conf.getAll
+      try {
+        OneBatchPerChunk.foreach { case (k, v) => conf.set(k, v) }
+        writer.start()
+      } finally OneBatchPerChunk.foreach { case (k, _) =>
+        saved.get(k).fold(conf.unset(k))(conf.set(k, _))
+      }
+    }
+  }
 
   /** The STORAGE-BACKED realization of [[WindowCountStore]] — the 100 TB
     * story its scaladoc promises, implemented without any external jar:
@@ -347,9 +406,5 @@ object Sinks {
     * scaladoc made, kept. */
   def interactiveWindowCountsParquet(aggregated: DataFrame, store: ParquetWindowStore,
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    aggregated.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) => store.upsert(batch, id) }
-      .start()
+    startOneBatchPerChunk(aggregated, trigger) { (batch, id) => store.upsert(batch, id) }
 }

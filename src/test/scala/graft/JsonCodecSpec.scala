@@ -5,7 +5,8 @@ import graft.sinks.Sinks
 import graft.streaming.StreamOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** JSON codec (≙ JsonPOJOSerde), Kafka-envelope pipelines, streaming
@@ -169,6 +170,170 @@ class JsonCodecSpec extends AnyFunSuite {
     writer.join()
     probes.foreach { case (k, f, t) => assert(got(k, f, t) == brute(k, f, t), (k, f, t)) }
     assert(got("107", at(0), at(29)).map(_._2) == Seq.fill(30)(2L))
+  }
+
+  // -------------------------------------------------------------------
+  // One micro-batch per chunk (Sinks.OneBatchPerChunk)
+  // -------------------------------------------------------------------
+
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+  private val AllowMultiple = "spark.sql.streaming.statefulOperator.allowMultiple"
+
+  /** A 1-minute tumbling trace, one inner Seq per `addData`. The watermark
+    * (grace 0) is the highest event time of the earlier chunks: 10:01:10,
+    * 10:02:00, 10:03:59.999, 10:06:00, 10:06:30. It holds out-of-order rows
+    * within a chunk, a row whose window ends exactly at the watermark
+    * (b@10:01:40, dropped), one whose window ends 1 ms after it (a@10:03:30,
+    * kept) and rows 2–10 minutes late. */
+  private val edgeTrace: Seq[Seq[(String, String)]] = Seq(
+    Seq("a" -> "10:00:05", "a" -> "10:00:30", "b" -> "10:01:10"),
+    Seq("a" -> "10:00:50", "b" -> "10:01:20", "a" -> "10:02:00"),
+    Seq("b" -> "10:01:40", "a" -> "10:02:30", "c" -> "10:03:59.999", "c" -> "10:03:10"),
+    Seq("a" -> "10:03:30", "b" -> "10:02:59", "c" -> "10:06:00", "c" -> "10:05:10", "a" -> "10:03:00"),
+    Seq("a" -> "10:00:10", "b" -> "09:57:00", "c" -> "10:04:30", "c" -> "10:05:59.999", "a" -> "10:06:30"),
+    Seq("a" -> "10:08:00", "b" -> "10:05:30"))
+  private def at(t: String) = ts(s"2025-01-01 $t")
+
+  /** An update-mode `foreachBatch` upsert into `store`, started with the
+    * session's confs as they are (Spark's defaults unless a caller set
+    * them). */
+  private def plainUpsert(agg: DataFrame, store: Sinks.WindowCountStore): StreamingQuery =
+    agg.writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (batch: DataFrame, _: Long) => store.upsert(batch) }
+      .start()
+
+  /** Runs `body` with `confs` set on the session, restoring the previous
+    * values (or their absence) afterwards. */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = spark.conf.getAll
+    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally confs.foreach { case (k, _) => saved.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** The progress reports of the micro-batches `q` executed (an idle
+    * trigger reports no `addBatch`). */
+  private def executed(q: StreamingQuery) =
+    q.recentProgress.filter(_.durationMs.containsKey("addBatch")).toSeq
+  private def batchIds(q: StreamingQuery): Seq[Long] = executed(q).map(_.batchId)
+  private def droppedRows(q: StreamingQuery): Long =
+    executed(q).map(_.stateOperators.head.numRowsDroppedByWatermark).sum
+
+  private def feed(in: MemoryStream[(String, java.sql.Timestamp)], chunk: Seq[(String, String)],
+      qs: StreamingQuery*): Unit = {
+    in.addData(chunk.map { case (k, t) => (k, at(t)) })
+    qs.foreach(_.processAllAvailable())
+  }
+
+  private def cells(store: Sinks.WindowCountStore): Seq[(String, String, Long)] =
+    store.snapshot().map { case (k, w, c) => (k, w.toString.stripPrefix("2025-01-01 "), c) }
+
+  test("window-store sink runs one micro-batch per chunk and upserts what Spark's two-batch default does") {
+    val in = MemoryStream[(String, java.sql.Timestamp)]
+    val agg = StreamOps.tumblingCount(in.toDF().toDF("key", "eventTime"), "1 minute")
+    val sink, twoBatch = new Sinks.WindowCountStore
+    val q = Sinks.interactiveWindowCounts(agg, sink)
+    val d = plainUpsert(agg, twoBatch)
+    try {
+      edgeTrace.zipWithIndex.foreach { case (chunk, i) =>
+        feed(in, chunk, q, d)
+        assert(cells(sink) == cells(twoBatch), s"stores differ after chunk $i")
+        assert(batchIds(q) == (0L to i), s"sink batches after chunk $i")
+      }
+      // the default form ran its watermark-only batches besides
+      assert(batchIds(d).size > edgeTrace.size)
+      assert(cells(sink) == Seq(
+        ("a", "10:00:00.0", 2L), ("a", "10:02:00.0", 2L), ("a", "10:03:00.0", 2L),
+        ("a", "10:06:00.0", 1L), ("a", "10:08:00.0", 1L), ("b", "10:01:00.0", 2L),
+        ("c", "10:03:00.0", 2L), ("c", "10:05:00.0", 1L), ("c", "10:06:00.0", 1L)))
+      assert(droppedRows(q) == 8L)
+    } finally { q.stop(); d.stop() }
+  }
+
+  test("window-store sink: no-data batches off without the single watermark cuts late rows at a stale watermark") {
+    // why the sink needs BOTH confs: alone, noDataMicroBatches=false drops
+    // late rows at the watermark from two chunks back, so rows whose window
+    // has closed are counted into windows the default never holds
+    val in = MemoryStream[(String, java.sql.Timestamp)]
+    val agg = StreamOps.tumblingCount(in.toDF().toDF("key", "eventTime"), "1 minute")
+    val noDataOnly, twoBatch = new Sinks.WindowCountStore
+    val n = withConfs(NoDataBatches -> "false", AllowMultiple -> "true")(plainUpsert(agg, noDataOnly))
+    val d = plainUpsert(agg, twoBatch)
+    try {
+      edgeTrace.foreach(feed(in, _, n, d))
+      assert(batchIds(n) == edgeTrace.indices.map(_.toLong))
+      val extra = cells(noDataOnly).diff(cells(twoBatch))
+      // b@10:02:59 (chunk 4) and c@10:04:30 (chunk 5) each open a window
+      // the watermark had already closed
+      assert(extra.contains(("b", "10:02:00.0", 1L)) && extra.contains(("c", "10:04:00.0", 1L)), extra)
+    } finally { n.stop(); d.stop() }
+  }
+
+  test("window-store sink keeps tumbling state bounded by the watermark over a long run") {
+    val in = MemoryStream[(String, java.sql.Timestamp)]
+    val agg = StreamOps.tumblingCount(in.toDF().toDF("key", "eventTime"), "1 minute")
+    val store = new Sinks.WindowCountStore
+    val q = Sinks.interactiveWindowCounts(agg, store)
+    val keys = (0 until 5).map(k => s"k$k")
+    val windowsPerChunk = 2
+    val chunks = 40
+    val base = at("00:00:00").getTime
+    def t(minute: Int, second: Int) = new java.sql.Timestamp(base + minute * 60000L + second * 1000L)
+    // a data batch holds the windows its chunk touched plus the last window
+    // of the chunk before, which the next batch evicts
+    val bound = keys.size * (windowsPerChunk + 1)
+    try {
+      val rows = (0 until chunks).map { c =>
+        val first = c * windowsPerChunk
+        val live = for (k <- keys; m <- 0 until windowsPerChunk; s <- Seq(10, 50)) yield (k, t(first + m, s))
+        // one row per chunk whose window closed three chunks back
+        in.addData(if (c >= 3) live :+ ((keys.head, t(first - 5, 30))) else live)
+        q.processAllAvailable()
+        executed(q).filter(_.batchId == c).last.stateOperators.head.numRowsTotal
+      }
+      assert(rows.forall(_ <= bound), rows)
+      // it plateaus at the bound from the second chunk on: no growth with chunk count
+      assert(rows.tail.distinct == Seq(bound.toLong), rows)
+      assert(batchIds(q) == (0L until chunks))
+      // eviction touches state only: the store keeps every window it was sent
+      assert(store.snapshot().size == keys.size * windowsPerChunk * chunks)
+      assert(droppedRows(q) == chunks - 3)
+    } finally q.stop()
+  }
+
+  test("window-store sinks leave the caller's session confs as they were; an append query after them keeps its watermark-only batch") {
+    val keys = Seq(NoDataBatches, AllowMultiple)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pq-confs").toString + "/store"
+    def startBoth(): Unit = {
+      val in = MemoryStream[(String, java.sql.Timestamp)]
+      val agg = StreamOps.tumblingCount(in.toDF().toDF("key", "eventTime"), "1 minute")
+      val heap = Sinks.interactiveWindowCounts(agg, new Sinks.WindowCountStore)
+      val pq = Sinks.interactiveWindowCountsParquet(agg, new Sinks.ParquetWindowStore(spark, dir, numBuckets = 2))
+      try {
+        // the started queries run with the sink's confs, one batch a chunk
+        Seq(Seq("a" -> "10:00:10"), Seq("a" -> "10:01:30")).foreach(feed(in, _, heap, pq))
+        assert(batchIds(heap) == Seq(0L, 1L) && batchIds(pq) == Seq(0L, 1L))
+      } finally { heap.stop(); pq.stop() }
+    }
+    // unset: the test session sets neither conf
+    assert(keys.forall(k => !spark.conf.getAll.contains(k)))
+    startBoth()
+    keys.foreach(k => assert(!spark.conf.getAll.contains(k), s"$k leaked into the session"))
+    withConfs(keys.map(_ -> "true"): _*) {
+      startBoth()
+      keys.foreach(k => assert(spark.conf.getAll.get(k).contains("true"), s"$k not restored"))
+    }
+    // an append-mode window emits when the watermark passes its end, which
+    // after the last chunk only the watermark-only batch can do
+    val in = MemoryStream[(String, java.sql.Timestamp)]
+    val appended = Sinks.memoryTable(StreamOps.tumblingCount(in.toDF().toDF("key", "eventTime"), "1 minute"),
+      "window_append_after_sinks", OutputMode.Append()).start()
+    try {
+      Seq(Seq("a" -> "10:00:10"), Seq("a" -> "10:01:30")).foreach(feed(in, _, appended))
+      val got = spark.table("window_append_after_sinks").select($"key", $"window_start", $"cnt")
+        .as[(String, java.sql.Timestamp, Long)].collect().toSeq
+      assert(got == Seq(("a", at("10:00:00"), 1L)))
+      assert(batchIds(appended).size > 2)
+    } finally appended.stop()
   }
 
   test("parquet window store: storage-backed fetch matches the heap store live, prunes buckets, survives compaction") {
