@@ -157,43 +157,6 @@ object CorpusPrep {
       accepted: Long, //     after signature near-dup vs the store
       totalStored: Long) //  cumulative corpus rows after this batch
 
-  /** The corpus-GROWTH flow: ingest one new batch against a persistent
-    * store without rescanning the accepted corpus —
-    *
-    *   normalize → gate → [[Dedup.exactIncremental]] (digest vs the
-    *   (fp, keep_id) store) → SimHash-signature near-dup vs the signature
-    *   store (the same online rule as `StreamOps.streamingNearDup`; full
-    *   pair-verified canonicalization stays a periodic batch job — the
-    *   documented online/offline recall split) → append to train shards.
-    *
-    * Store layout under `storeDir`: `batches/b_<batchId>/{shards,fp,sig,
-    * mh,meta}` plus an empty `_COMMIT` marker written LAST — one
-    * directory per ingested batch holding that batch's accepted content
-    * fingerprints (`fp`), simhash signatures (`sig`), minhash band keys
-    * + signatures (`mh`, the banded near-dup probe), pos-ordered
-    * training shards (`shards`), and one accepted-count row (`meta`, so
-    * the stored-corpus size is a tiny-relation sum rather than a shard
-    * rescan). Readers union only COMMITTED batch directories, which makes
-    * the multi-relation append atomic without a transaction log:
-    * `batchId` is a deterministic content hash of the batch, so a crash
-    * between the four writes leaves an uncommitted directory that (a) no
-    * reader ever sees and (b) the retry of the same batch OVERWRITES
-    * in-place before committing. Replaying an already-committed batch is
-    * idempotent by construction — every fingerprint anti-joins away,
-    * nothing is written, and the shards are byte-identical (pinned by
-    * test). Single-writer by design (like any append-only ingest log);
-    * concurrent ingests would need an external lock.
-    *
-    * New docs take positions `totalStored … totalStored+n-1` — within a
-    * batch in the same deterministic md5 order as
-    * [[Pipeline.globalOrderShards]], across batches in commit order, so
-    * growth never reorders what a resumed loader already streamed.
-    *
-    * Scale shape: the batch shuffles on digests/signatures only (24
-    * bytes/doc); the store sides are narrow columns that AQE broadcasts
-    * while small and co-shuffles when grown; the accepted-batch relations
-    * are localCheckpoint'ed before any store write so no lineage can
-    * re-read a store path mid-append. */
   /** Committed, non-superseded batch directories — the only state any
     * store reader sees. A committed compaction directory lists the
     * source directories it replaced in its `_COMPACTED_FROM` manifest;
@@ -252,7 +215,50 @@ object CorpusPrep {
       }
       .start()
 
-  /** @param pre raw-ingest extraction applied to the batch BEFORE the
+  /** The corpus-GROWTH flow: ingest one new batch against a persistent
+    * store without rescanning the accepted corpus —
+    *
+    *   normalize → gate → exact dedup ([[Dedup.exact]] keepers vs the
+    *   (fp, keep_id) store) → SimHash-signature near-dup vs the signature
+    *   store (the same online rule as `StreamOps.streamingNearDup`; full
+    *   pair-verified canonicalization stays a periodic batch job — the
+    *   documented online/offline recall split) → banded-minhash near-dup
+    *   vs the `mh` store → append to train shards.
+    *
+    * Store layout under `storeDir`: `batches/b_<batchId>/{shards,fp,sig,
+    * mh,attrs,meta,lfp}` plus an empty `_COMMIT` marker written LAST — one
+    * directory per ingested batch holding that batch's accepted content
+    * fingerprints (`fp`), simhash signatures (`sig`), minhash band keys
+    * + signatures (`mh`, the banded near-dup probe), pos-ordered
+    * training shards (`shards`), and one accepted-count row (`meta`, so
+    * the stored-corpus size is a tiny-relation sum rather than a shard
+    * rescan). Readers union only COMMITTED batch directories, which makes
+    * the multi-relation append atomic without a transaction log:
+    * `batchId` is a deterministic content hash of the batch, so a crash
+    * between the writes leaves an uncommitted directory that (a) no
+    * reader ever sees and (b) the retry of the same batch OVERWRITES
+    * in-place before committing. Replaying an already-committed batch is
+    * idempotent by construction — every fingerprint anti-joins away,
+    * nothing is written, and the shards are byte-identical (pinned by
+    * test). Single-writer by design (like any append-only ingest log);
+    * concurrent ingests would need an external lock.
+    *
+    * New docs take positions `totalStored … totalStored+n-1` — within a
+    * batch in the same deterministic md5 order as
+    * [[Pipeline.globalOrderShards]], across batches in commit order, so
+    * growth never reorders what a resumed loader already streamed.
+    *
+    * Scale shape: the batch shuffles on digests/signatures only (24
+    * bytes/doc); the store sides are narrow columns that AQE broadcasts
+    * while small and co-shuffles when grown. Two localCheckpoints precede
+    * every store write, so no lineage can re-read a store path
+    * mid-append: the novel fingerprints, and ONE row per accepted doc
+    * (the gated columns plus simhash, minhash signature and band keys)
+    * that every store relation but the shards projects without a
+    * shuffle. The report counts are observations on the checkpoints'
+    * own actions, so no action runs only to count.
+    *
+    * @param pre raw-ingest extraction applied to the batch BEFORE the
     *             content-hash batch id, line dedup, and normalization —
     *             the same hook as [[run]]'s `pre` (HTML strip, C4 line
     *             rules); map-side-only transforms keep the per-batch
@@ -284,15 +290,14 @@ object CorpusPrep {
     // probe relation (fp/lfp/sig/mh) anti-joins tombstoned keepers below,
     // so content re-ingested AFTER a takedown is accepted afresh instead
     // of silently deduped against removed text. Skipped on a
-    // tombstone-free store so the common-case plan is unchanged.
-    val tombed = graft.sources.BatchStore.dirsWithRelation(spark, committed, "tomb").nonEmpty
+    // tombstone-free store so the common-case plan is unchanged. The
+    // tombstones are read once, from the `committed` snapshot.
+    val tombDirs = graft.sources.BatchStore.dirsWithRelation(spark, committed, "tomb")
+    lazy val tombIds = broadcast(readStoreIn(spark, tombDirs, "tomb", "id BIGINT"))
+      .select(col("id").as("__tomb_id"))
     def untombed(rel: DataFrame, keeperDocId: org.apache.spark.sql.Column): DataFrame =
-      if (!tombed) rel
-      // renamed join key: shard relations can carry arbitrary ingest
-      // columns, so a bare `id` would risk ambiguity
-      else rel.join(graft.sources.BatchStore.readTombstones(spark, storeDir)
-          .select(col("id").as("__tomb_id")),
-        keeperDocId === col("__tomb_id"), "left_anti")
+      if (tombDirs.isEmpty) rel
+      else rel.join(tombIds, keeperDocId === col("__tomb_id"), "left_anti")
 
     // raw-ingest extraction first, so every store decision (content id,
     // line claims, fingerprints) is over what actually enters the corpus;
@@ -313,16 +318,13 @@ object CorpusPrep {
     // Wrapping SUM, not bit_xor: xor cancels rows repeated an even number
     // of times, so two different all-doubled batches would collide on 0
     // and the later one would be dropped as a replay (the appendIvfIndex
-    // fix, applied here for the same structural reason).
-    val idRow = extracted
+    // fix, applied here for the same structural reason). Only the writes
+    // need it, so it runs beside the dedup stages unless it fills `pre`'s cache.
+    val idF = java.util.concurrent.CompletableFuture.supplyAsync(() => extracted
       .agg(coalesce(sum(expr("xxhash64(doc_id, text)").cast("decimal(38,0)")),
         lit(java.math.BigDecimal.ZERO)), count(lit(1)))
-      .collect()(0)
-    val extractedRows = idRow.getLong(1)
-    val reportBatchRows = if (batchRows < 0) extractedRows else batchRows
-    val batchId =
-      f"${graft.sources.BatchStore.wrap64(idRow.getDecimal(0))}%016x_$extractedRows"
-    val batchDir = s"$storeDir/batches/b_$batchId"
+      .collect()(0))
+    if (extracted ne batch) idF.join()
 
     // optional line-level dedup vs the accepted-line store (the
     // RefinedWeb ingest treatment, batch-incrementally), on the RAW
@@ -349,16 +351,19 @@ object CorpusPrep {
     val nToks = size(graft.functions.Funcs.tokens(col("text"))).cast("bigint")
     val gated = normed.filter(nToks >= minTokens && nToks <= maxTokens)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val gatedCount = gated.count()
 
-    // exact dedup vs the fingerprint store (plus first-in-batch keeper),
-    // retracted keepers' claims released
+    // exact dedup vs the fp store: each fp group's first-in-batch keeper
+    // unless the store has seen the fp. The checkpoint's own action also
+    // counts the gated rows (the sum of the group sizes) and the novel fps.
     val fpStore = untombed(readStore("fp", "fp STRING, keep_id BIGINT"), col("keep_id"))
-    val novelFp = Dedup.exactIncremental(gated, fpStore)._1.localCheckpoint(true)
-    // report count over the checkpointed partitions — concurrent with the
-    // candidate stage below instead of a sequential job after the writes
-    val novelFpCountF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-      novelFp.count())
+    val exactNovel = Dedup.exact(gated)
+      .observe("graft_ingest_gated", sum(col("dup_cnt")))
+      .select("fp", "keep_id")
+      .join(fpStore.select("fp"), Seq("fp"), "left_anti")
+      .observe("graft_ingest_novel", count(lit(1)))
+    val novelFp = exactNovel.localCheckpoint(true)
+    val gatedCount = observedCount(exactNovel, "graft_ingest_gated")
+    val novelExact = observedCount(exactNovel, "graft_ingest_novel")
     val novelDocs = gated.join(novelFp.select(col("keep_id").as("doc_id")), Seq("doc_id"))
 
     // signature near-dup: one sig per novel doc, collapse in-batch by
@@ -370,7 +375,6 @@ object CorpusPrep {
       .select(col("doc_id"), Native.simhash(Funcs.tokens(col("text"))).as("sig"))
       .groupBy("sig").agg(min(col("doc_id")).as("doc_id"))
       .join(sigStore, Seq("sig"), "left_anti")
-      .select(col("doc_id"), col("sig"))
 
     // banded-minhash near-dup vs the store: the exact-signature stage
     // only collapses docs whose simhash is IDENTICAL (re-encodes,
@@ -386,49 +390,28 @@ object CorpusPrep {
     val mhStore = untombed(
       readStore("mh", "band INT, bkey BIGINT, sig ARRAY<BIGINT>, keep_id BIGINT"),
       col("keep_id"))
-    // r17: the simhash rides along the band relation so ONE localCheckpoint
-    // materializes the whole candidate stage — checkpointing sigs and bands
-    // separately re-executed the shared sigCands→minhash→band subtree (and
-    // the mhStore rejection join) once per checkpoint. Every candidate doc
-    // carries exactly 4 band rows (lshBandKeys slices a fixed-width
-    // signature), so distinct (doc_id, sig) below recovers precisely the
-    // old acceptedSigs relation from the checkpointed bands.
-    val candMh = sigCands
-      .join(gated.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .select(col("doc_id"), col("sig").as("ssig"),
-        Native.minhashFromTokens(Funcs.tokens(col("text")), 3, 16).as("msig"))
-      .select(col("doc_id"), col("ssig"), col("msig"),
-        posexplode(Funcs.lshBandKeys(col("msig"), 4, 4)).as(Seq("band", "bkey")))
-    val mhRejected = candMh.join(mhStore, Seq("band", "bkey"))
+    // one row per candidate doc: every gated column plus the sketches the
+    // store relations are written from; `__keep_id` is doc_id again, but
+    // nullable like its min() aggregate, as the claim schemas have it
+    val cand = gated
+      .join(sigCands.select(col("doc_id"), col("doc_id").as("__keep_id"), col("sig").as("__ssig")),
+        Seq("doc_id"))
+      .withColumn("__msig", Native.minhashFromTokens(Funcs.tokens(col("text")), 3, 16))
+      .withColumn("__bkeys", Funcs.lshBandKeys(col("__msig"), 4, 4))
+    // rejected ids are batch-bounded, so they broadcast into the anti-join;
+    // no distinct — an anti-join ignores build-side duplicates
+    val mhRejected = cand
+      .select(col("doc_id"), col("__msig"), posexplode(col("__bkeys")).as(Seq("band", "bkey")))
+      .join(mhStore, Seq("band", "bkey"))
       .filter(
-        aggregate(zip_with(col("msig"), col("sig"), (a, b) => when(a === b, 1).otherwise(0)),
+        aggregate(zip_with(col("__msig"), col("sig"), (a, b) => when(a === b, 1).otherwise(0)),
           lit(0), (acc, x) => acc + x).cast("double") / 16.0 >= nearDupJaccard)
-      .select("doc_id").distinct()
-    val acceptedBands = candMh.join(mhRejected, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    val acceptedSigs = acceptedBands
-      .select(col("doc_id"), col("ssig").as("sig")).distinct()
-    // persisted: three of the concurrent store writes below (shards ×2
-    // via the pos join, attrs) consume the accepted relation — without
-    // the boundary each write re-runs the gated⋈acceptedSigs join, which
-    // at corpus scale is a repeated shuffle (released by releaseCaches
-    // at the end of the ingest like every operator cache)
-    val accepted = gated.join(acceptedSigs.select("doc_id"), Seq("doc_id"))
-      .transform(graft.operators.Caches.persisted)
-    // r18: count the CHECKPOINTED band rows (no shuffle) instead of
-    // acceptedSigs.count() (a distinct = one more shuffle job per ingest):
-    // each candidate doc carries exactly 4 band rows — lshBandKeys slices
-    // a fixed-width signature into 4 bands and posexplode is inner over a
-    // non-null fixed-length array — so bands/4 IS the accepted-doc count.
-    // The modulus check trips if that width invariant is ever broken
-    // (e.g. a null/short band array), which would otherwise silently
-    // corrupt the accepted set — the r17-advice fragility, now asserted.
-    val bandRows = acceptedBands.count()
-    require(bandRows % 4 == 0,
-      s"ingest: $bandRows accepted band rows is not a multiple of 4 — " +
-        "lshBandKeys no longer emits fixed-width bands; accepted-set " +
-        "derivation from the band relation is unsound")
-    val acceptedCount = bandRows / 4
+      .select("doc_id")
+    // the second checkpoint: one row per accepted doc, counted on the way in
+    val acceptedRows = cand.join(broadcast(mhRejected), Seq("doc_id"), "left_anti")
+      .observe("graft_ingest_accepted", count(lit(1)))
+    val accepted = acceptedRows.localCheckpoint(true)
+    val acceptedCount = observedCount(acceptedRows, "graft_ingest_accepted")
 
     // write accepted docs as this batch's shard slice, positions
     // continuing after the stored corpus (batch-internal order = the md5
@@ -439,15 +422,18 @@ object CorpusPrep {
     // collect has been running concurrently since the top of the ingest
     // (baseF); this is the await.
     val base = baseF.get()
+    val idRow = idF.get()
+    val extractedRows = idRow.getLong(1)
+    val batchId =
+      f"${graft.sources.BatchStore.wrap64(idRow.getDecimal(0))}%016x_$extractedRows"
+    val batchDir = s"$storeDir/batches/b_$batchId"
     if (acceptedCount > 0) {
-      // all four relations land in this batch's own (uncommitted)
-      // directory in OVERWRITE mode — a retry after a crash replaces any
-      // partial state — and the _COMMIT marker goes last, making the
-      // whole batch visible to readers atomically
-      val ordered = Pipeline.globalOrderShards(accepted, shardSize)
-        .withColumn("pos", col("pos") + base)
-        .withColumn("shard", floor(col("pos") / shardSize).cast("bigint"))
-        .join(accepted, Seq("doc_id"))
+      // all relations land in this batch's own (uncommitted) directory in
+      // OVERWRITE mode — a retry after a crash replaces any partial state
+      // — and the _COMMIT marker goes last, making the whole batch
+      // visible to readers atomically
+      val ordered = Pipeline.orderedShards(
+        accepted.drop("__keep_id", "__ssig", "__msig", "__bkeys"), shardSize, posBase = base)
       // r18: EXPLICIT width on the shard-write shuffle. A keyed
       // repartition with no width is AQE-coalescible, and the shuffled
       // bytes are tiny, so AQE folded the write into ONE task that
@@ -459,15 +445,13 @@ object CorpusPrep {
       val nShards = (base + acceptedCount - 1) / shardSize - base / shardSize + 1
       val writeWidth = math.max(1L, math.min(nShards,
         spark.sparkContext.defaultParallelism.toLong * 2)).toInt
-      // r17: the six relation writes are mutually independent (different
-      // directories, inputs all checkpointed/persisted upstream), so they
-      // run as CONCURRENT jobs (guide §2.6 overlap-independent-jobs) —
-      // measured sequentially they cost writes' SUM per ingest while the
-      // cluster idles through each tail; concurrently they cost ~the
-      // shards write alone. The _COMMIT marker still goes strictly LAST,
-      // after every write has returned, so atomicity is untouched.
-      // r18: the meta write (a driver-local one-row relation) rides in the
-      // same concurrent batch instead of serializing after it.
+      // r17: the relation writes are mutually independent (different
+      // directories, inputs all checkpointed upstream), so they run as
+      // CONCURRENT jobs (guide §2.6 overlap-independent-jobs) — measured
+      // sequentially they cost writes' SUM per ingest while the cluster
+      // idles through each tail; concurrently they cost ~the shards write
+      // alone. The _COMMIT marker still goes strictly LAST, after every
+      // write has returned, so atomicity is untouched.
       import spark.implicits._
       graft.sources.BatchStore.runConcurrently(
         Seq(
@@ -479,13 +463,15 @@ object CorpusPrep {
             .coalesce(1).write.mode("overwrite").parquet(s"$batchDir/meta"),
           // only ACCEPTED docs' fingerprints enter the store — it tracks
           // the accepted corpus, so a signature-rejected doc stays
-          // re-checkable
-          () => novelFp.join(acceptedSigs.select(col("doc_id").as("keep_id")), Seq("keep_id"))
-            .select("fp", "keep_id").write.mode("overwrite").parquet(s"$batchDir/fp"),
-          () => acceptedSigs.select(col("sig"), col("doc_id").as("keep_id"))
+          // re-checkable. An accepted doc is its fp group's keeper, so its
+          // own text's fingerprint is the group's.
+          () => accepted
+            .select(Funcs.fingerprint(col("text")).as("fp"), col("__keep_id").as("keep_id"))
+            .write.mode("overwrite").parquet(s"$batchDir/fp"),
+          () => accepted.select(col("__ssig").as("sig"), col("__keep_id").as("keep_id"))
             .write.mode("overwrite").parquet(s"$batchDir/sig"),
-          () => acceptedBands.select(col("band"), col("bkey"), col("msig").as("sig"),
-              col("doc_id").as("keep_id"))
+          () => accepted.select(posexplode(col("__bkeys")).as(Seq("band", "bkey")),
+              col("__msig").as("sig"), col("__keep_id").as("keep_id"))
             .write.mode("overwrite").parquet(s"$batchDir/mh"),
           // Dolma-style attributes sidecar: every committed batch persists
           // the attributeReport relation for its ACCEPTED docs (over the
@@ -502,20 +488,33 @@ object CorpusPrep {
           // lines stay claimable by a later batch
           () => lineNovel
             .withColumn("doc_id", shiftrightunsigned(col("keep_okey"), 32))
-            .join(acceptedSigs.select("doc_id"), Seq("doc_id"))
+            .join(accepted.select("doc_id"), Seq("doc_id"))
             .select("fp", "keep_okey")
             .write.mode("overwrite").parquet(s"$batchDir/lfp")) else Nil))
       fs.create(new org.apache.hadoop.fs.Path(s"$batchDir/_COMMIT"), true).close()
     }
+    // a long-running ingest stream calls this once per micro-batch, so all
+    // it persisted (the Caches registry included) goes, or blocks pile up
+    Seq(novelFp, accepted).foreach(releaseCheckpoint)
     gated.unpersist()
     if (lined ne extracted) lined.unpersist()
     if (extracted ne batch) extracted.unpersist()
-    // line-claim internals persist through the Caches registry; a
-    // long-running ingest stream calls this once per micro-batch, so the
-    // registry must drain here or cached blocks accumulate without bound
     Dedup.releaseCaches(spark)
-    IncrementalReport(reportBatchRows, gatedCount, novelFpCountF.get(), acceptedCount,
-      base + acceptedCount)
+    IncrementalReport(if (batchRows < 0) extractedRows else batchRows, gatedCount,
+      novelExact, acceptedCount, base + acceptedCount)
+  }
+
+  /** The count observation `name` collected by the action that ran `ds`;
+    * 0 when AQE pruned the observed node away over an empty input. */
+  private def observedCount(ds: DataFrame, name: String): Long =
+    ds.queryExecution.observedMetrics.get(name)
+      .filterNot(_.isNullAt(0)).map(_.getLong(0)).getOrElse(0L)
+
+  /** Unpersist a `localCheckpoint`ed Dataset's RDD, which otherwise stays
+    * persisted for the life of the session. */
+  private def releaseCheckpoint(ds: DataFrame): Unit = ds.queryExecution.logical.foreach {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 
   /** Retract documents from the store (takedown / robots revocation):

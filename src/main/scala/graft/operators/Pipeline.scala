@@ -190,27 +190,46 @@ object Pipeline {
     * prefix of the sort key), so (1) a 256-row per-bucket count relation
     * gets the running offsets — the only unpartitioned window, over ≤256
     * rows — and (2) each bucket ranks its own 1/256 slice independently
-    * under a partitioned window. pos = bucket offset + rank within bucket.
+    * under a partitioned window. pos = bucket offset + rank within bucket;
+    * the offsets broadcast joins AFTER the rank window, so the bucket
+    * exchange runs beside the offsets chain instead of behind it.
     * At 100 TB, widen the prefix (`prefixChars` = 4 → 65 536 slices) to
     * keep each per-bucket sort in one task's memory; the offsets relation
-    * stays tiny and broadcasts. */
+    * stays tiny and broadcasts. Emits (doc_id, pos, shard); the shard
+    * writers use [[orderedShards]], which carries the payload columns
+    * through the same window instead of joining them back. */
   def globalOrderShards(
       documents: DataFrame,
       shardSize: Long = 100L,
-      prefixChars: Int = 2): DataFrame = {
+      prefixChars: Int = 2): DataFrame =
+    orderedShards(documents.select("doc_id"), shardSize, prefixChars)
+
+  /** [[globalOrderShards]] with every column of `documents` carried
+    * through the bucket-partitioned rank window: (doc_id, pos, shard, then
+    * the other input columns in input order), positions starting at
+    * `posBase` (a store appending after its committed corpus). The payload
+    * rides the bucket exchange, so writing ordered shards needs no
+    * doc_id join back to the corpus. */
+  private[graft] def orderedShards(
+      documents: DataFrame,
+      shardSize: Long,
+      prefixChars: Int = 2,
+      posBase: Long = 0L): DataFrame = {
     require(prefixChars >= 1 && prefixChars <= 7, "prefix must stay in int range")
-    val base = documents.select(col("doc_id"),
-      md5(col("doc_id").cast("string")).as("h"))
-      .withColumn("bucket", conv(substring(col("h"), 1, prefixChars), 16, 10).cast("int"))
-    val wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy("bucket").agg(count(lit(1)).as("n"))
-      .withColumn("offset", coalesce(sum(col("n")).over(wb), lit(0L)))
-      .select("bucket", "offset")
-    val wr = Window.partitionBy("bucket").orderBy("h", "doc_id")
-    base.join(broadcast(offsets), Seq("bucket"))
-      .withColumn("pos", (col("offset") + row_number().over(wr) - 1).cast("bigint"))
-      .select(col("doc_id"), col("pos"),
-        floor(col("pos") / shardSize).cast("bigint").as("shard"))
+    val payload = documents.columns.filter(_ != "doc_id").map(c => col(s"`$c`"))
+    val base = documents
+      .withColumn("__h", md5(col("doc_id").cast("string")))
+      .withColumn("__bucket", conv(substring(col("__h"), 1, prefixChars), 16, 10).cast("int"))
+    val wb = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = base.groupBy("__bucket").agg(count(lit(1)).as("__n"))
+      .withColumn("__offset", coalesce(sum(col("__n")).over(wb), lit(0L)))
+      .select("__bucket", "__offset")
+    val wr = Window.partitionBy("__bucket").orderBy("__h", "doc_id")
+    base.withColumn("__rank", row_number().over(wr))
+      .join(broadcast(offsets), Seq("__bucket"))
+      .withColumn("pos", (col("__offset") + col("__rank") - 1 + posBase).cast("bigint"))
+      .select((Seq(col("doc_id"), col("pos"),
+        floor(col("pos") / shardSize).cast("bigint").as("shard")) ++ payload): _*)
   }
 
   /** Curriculum ordering — [[globalOrderShards]] with a leading curriculum
@@ -260,9 +279,7 @@ object Pipeline {
     * spillable per-task sort, never a global one; `partitionBy` prunes
     * reads to the shard ranges a resumed run still needs. */
   def writeTrainingShards(documents: DataFrame, path: String, shardSize: Long = 100L): Unit = {
-    val ordered = globalOrderShards(documents, shardSize)
-      .join(documents, Seq("doc_id"))
-    ordered
+    orderedShards(documents, shardSize)
       // r18: explicit width — an AQE-coalescible keyed repartition over
       // tiny rows folds to ONE task that creates every shard directory's
       // file serially (file creation is per-output-unit work; the width

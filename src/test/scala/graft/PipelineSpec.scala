@@ -787,6 +787,288 @@ class PipelineSpec extends AnyFunSuite {
     assert(r3.accepted == 0L && r3.totalStored == 2L)
   }
 
+  // ---- ingest equivalence trace ------------------------------------------
+  // Three batches with a retraction between the second and third; each
+  // ingest stage drops at least one doc: the token gate (4), an in-batch
+  // exact copy (2), a token permutation in-batch (3) and against the store
+  // (14) — same simhash, different fingerprint —, a stored exact copy (11),
+  // a minhash near-dup of a stored doc (12, two edits of 5), and re-ingests
+  // of retracted text (21, 22). Docs 6 and 13 share a line and 7 and 15
+  // differ only in markup, so the line-dedup and `pre` variants drop more.
+  // The pinned reports and digests were recorded from the earlier,
+  // count-based ingest.
+
+  private val mhText = (1 to 100).map(i => s"tok$i")
+  private val traceBatches: Seq[Seq[(Long, String)]] = Seq(
+    Seq(
+      1L -> "alpha beta gamma delta epsilon zeta",
+      2L -> "alpha beta gamma delta epsilon zeta",
+      3L -> "zeta epsilon delta gamma beta alpha",
+      4L -> "tiny doc",
+      5L -> mhText.mkString(" "),
+      6L -> "one two three four five six\nseven eight nine ten eleven twelve",
+      7L -> "<p>red orange yellow green blue indigo</p>",
+      8L -> "monday tuesday wednesday thursday friday saturday"),
+    Seq(
+      11L -> "alpha beta gamma delta epsilon zeta",
+      12L -> mhText.updated(10, "EDITa").updated(80, "EDITb").mkString(" "),
+      13L -> "seven eight nine ten eleven twelve\nthirteen fourteen fifteen sixteen seventeen",
+      14L -> "beta alpha gamma delta zeta epsilon",
+      15L -> "red orange yellow green blue indigo",
+      16L -> "sun moon star planet comet galaxy"),
+    Seq(
+      21L -> "monday tuesday wednesday thursday friday saturday",
+      22L -> "sun moon star planet comet galaxy",
+      23L -> "new words appear in this final batch"))
+
+  private def batchDf(docs: Seq[(Long, String)]) =
+    docs.toDF("doc_id", "text").withColumn("source", lit("s0")).withColumn("lang", lit("en"))
+
+  private val stripTags: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+    _.withColumn("text", regexp_replace($"text", "<[^>]*>", ""))
+
+  /** Ingest the trace into a fresh store; the reports in order. */
+  private def runTrace(store: String, lineLevelDedup: Boolean = false,
+      pre: Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = None)
+      : Seq[graft.apps.CorpusPrep.IncrementalReport] = {
+    def ingest(docs: Seq[(Long, String)]) = graft.apps.CorpusPrep.runIncremental(
+      spark, batchDf(docs), store, lineLevelDedup = lineLevelDedup, pre = pre)
+    val r1 = ingest(traceBatches(0))
+    val r2 = ingest(traceBatches(1))
+    assert(graft.apps.CorpusPrep.retract(spark, store, Seq(8L, 16L).toDF("doc_id")))
+    Seq(r1, r2, ingest(traceBatches(2)))
+  }
+
+  private def md5Hex(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("MD5").digest(bytes).map("%02x".format(_)).mkString
+
+  /** Per store relation, `<rows>:<digest>` over every committed batch
+    * directory's rows (each row prefixed by its directory name, so a row
+    * landing in another batch changes the digest); `shard_data` digests
+    * the bytes of every shard parquet file up to its footer — the pages
+    * with their encodings, statistics and compressed values — keyed by
+    * batch and shard. The footer is left out: parquet-mr lists each column
+    * chunk's encodings in hash-set order, which changes from JVM to JVM;
+    * `schemas` digests the distinct Spark schemas the footers record. */
+  private def storeDigests(store: String): Map[String, String] = {
+    val dirs = graft.sources.BatchStore.committedDirs(spark, store).sorted
+    def name(d: String) = new org.apache.hadoop.fs.Path(d).getName
+    def digest(lines: Seq[String]) =
+      s"${lines.size}:" + md5Hex(lines.sorted.mkString("\n").getBytes("UTF-8")).take(16)
+    def rows(rel: String) = dirs
+      .filter(graft.sources.BatchStore.hasRelation(spark, _, rel))
+      .flatMap(d => spark.read.parquet(s"$d/$rel").collect().toSeq
+        .map(r => s"${name(d)}|${r.toSeq.map {
+          case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+          case v => String.valueOf(v)
+        }.mkString(",")}"))
+    val rels = Seq("fp", "sig", "mh", "attrs", "meta", "lfp", "shards")
+    def files(d: String, rel: String): Seq[java.nio.file.Path] = {
+      val walk = java.nio.file.Files.walk(
+        java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(d).toUri.getPath, rel))
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+      } finally walk.close()
+    }
+    val present = for (d <- dirs; rel <- rels if graft.sources.BatchStore.hasRelation(spark, d, rel))
+      yield (d, rel)
+    val shardData = present.filter(_._2 == "shards").flatMap { case (d, rel) =>
+      files(d, rel).map { f =>
+        val bytes = java.nio.file.Files.readAllBytes(f)
+        val footer = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        s"${name(d)}/${f.getParent.getFileName}|" +
+          md5Hex(java.util.Arrays.copyOf(bytes, bytes.length - 8 - footer))
+      }
+    }
+    // the Spark schema each file was written with, nullability included
+    val schemas = present.flatMap { case (d, rel) =>
+      files(d, rel).map { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+        try s"$rel|" + reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally reader.close()
+      }
+    }.distinct
+    (rels.map(r => r -> digest(rows(r))) :+ ("shard_data" -> digest(shardData)) :+
+      ("schemas" -> digest(schemas))).toMap
+  }
+
+  private def assertTrace(store: String,
+      reports: Seq[graft.apps.CorpusPrep.IncrementalReport],
+      expectedReports: Seq[(Long, Long, Long, Long, Long)],
+      expectedDigests: Map[String, String]): Unit = {
+    val got = reports.map(r => (r.batchRows, r.gated, r.novelExact, r.accepted, r.totalStored))
+    val digests = storeDigests(store)
+    assert(got == expectedReports)
+    assert(digests == expectedDigests)
+  }
+
+  test("runIncremental trace: reports, store relations and shard bytes match the recorded values") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-trace")
+    val store = s"$tmp/store"
+    assertTrace(store, runTrace(store),
+      Seq((8, 7, 6, 5, 5), (6, 6, 5, 3, 8), (3, 3, 3, 3, 11)),
+      Map(
+        "fp" -> "11:14a8f7dfb7c14e72",
+        "sig" -> "11:8cbe372b4262c62c",
+        "mh" -> "44:a2f72b831fa26e76",
+        "attrs" -> "11:f3374a2e3fa0c1ac",
+        "meta" -> "3:24926c1d0203207e",
+        "lfp" -> "0:d41d8cd98f00b204",
+        "shards" -> "11:a38cb6682ca932c0",
+        "shard_data" -> "3:4f9f6994247d7781",
+        "schemas" -> "6:d67ae6d79f1261e7"))
+  }
+
+  test("runIncremental(lineLevelDedup) trace: reports, store relations and shard bytes match the recorded values") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-trace-lines")
+    val store = s"$tmp/store"
+    assertTrace(store, runTrace(store, lineLevelDedup = true),
+      Seq((8, 6, 6, 5, 5), (6, 5, 5, 3, 8), (3, 3, 3, 3, 11)),
+      Map(
+        "fp" -> "11:7adf691e2d732225",
+        "sig" -> "11:c6a1cc39266107b0",
+        "mh" -> "44:5c0f9f712ef27579",
+        "attrs" -> "11:3df33c283e08f244",
+        "meta" -> "3:24926c1d0203207e",
+        "lfp" -> "12:a0523c2b4ae4b16d",
+        "shards" -> "11:21fedfe886bf9ce8",
+        "shard_data" -> "3:0b7c993df3aef36d",
+        "schemas" -> "7:da673de87dd2e251"))
+  }
+
+  test("runIncremental(pre) trace: reports, store relations and shard bytes match the recorded values") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-trace-pre")
+    val store = s"$tmp/store"
+    assertTrace(store, runTrace(store, pre = Some(stripTags)),
+      Seq((8, 7, 6, 5, 5), (6, 6, 4, 2, 7), (3, 3, 3, 3, 10)),
+      Map(
+        "fp" -> "10:f6c5c14007ce8dad",
+        "sig" -> "10:4747314cc58b48c9",
+        "mh" -> "40:df915c94d6c9e2b1",
+        "attrs" -> "10:ed3757e28fd5557c",
+        "meta" -> "3:8d749a26b3d99bbd",
+        "lfp" -> "0:d41d8cd98f00b204",
+        "shards" -> "10:ef63b9b209da5d91",
+        "shard_data" -> "3:654df9751693d82b",
+        "schemas" -> "6:d67ae6d79f1261e7"))
+  }
+
+  test("runIncremental edge batches: all gated out, an exact replay, all minhash-rejected — exact reports, no commit") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-edges")
+    val store = s"$tmp/store"
+    def ingest(docs: Seq[(Long, String)]) =
+      graft.apps.CorpusPrep.runIncremental(spark, batchDf(docs), store)
+    def commits() = new java.io.File(s"$store/batches").listFiles()
+      .count(d => new java.io.File(d, "_COMMIT").exists())
+    val seed = Seq(
+      1L -> "alpha beta gamma delta epsilon zeta",
+      5L -> mhText.mkString(" "),
+      6L -> "one two three four five six")
+    assert(ingest(seed) == graft.apps.CorpusPrep.IncrementalReport(3, 3, 3, 3, 3))
+    assert(commits() == 1)
+    // every doc fails the token gate: nothing reaches the fp grouping
+    assert(ingest(Seq(31L -> "tiny", 32L -> "two words")) ==
+      graft.apps.CorpusPrep.IncrementalReport(2, 0, 0, 0, 3))
+    // an exact replay: every fingerprint is stored, no candidate survives
+    assert(ingest(seed) == graft.apps.CorpusPrep.IncrementalReport(3, 3, 0, 0, 3))
+    // novel fingerprints and simhashes, but every candidate's minhash
+    // bands hit doc 5 at agreement ≥ 0.8
+    assert(ingest(Seq(
+      41L -> mhText.updated(10, "EDITa").updated(80, "EDITb").mkString(" "),
+      42L -> mhText.updated(50, "EDITc").mkString(" "))) ==
+      graft.apps.CorpusPrep.IncrementalReport(2, 2, 2, 0, 3))
+    assert(commits() == 1, "a batch that accepts nothing must not commit")
+    assert(graft.apps.CorpusPrep.readShards(spark, store)
+      .select("doc_id").as[Long].collect().toSet == Set(1L, 5L, 6L))
+  }
+
+  test("runIncremental leaves no persisted RDD behind: two ingests add none to the session") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-leak")
+    val store = s"$tmp/store"
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    graft.apps.CorpusPrep.runIncremental(spark, batchDf(traceBatches(0)), store)
+    graft.apps.CorpusPrep.runIncremental(spark, batchDf(traceBatches(1)), store,
+      lineLevelDedup = true, pre = Some(stripTags))
+    val added = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(added.isEmpty, s"ingest left persisted RDDs: ${added.values.mkString(", ")}")
+  }
+
+  test("steady ingest into a tombstoned store: no count action, two localCheckpoints, shuffle-free relation writes, broadcast rejection anti-join") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-plan")
+    val store = s"$tmp/store"
+    graft.apps.CorpusPrep.runIncremental(spark, batchDf(traceBatches(0)), store)
+    assert(graft.apps.CorpusPrep.retract(spark, store, Seq(8L).toDF("doc_id")))
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = actions.add(fn -> qe)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = actions.add(fn -> qe)
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    // size-based broadcasting off: a broadcast join below can only come
+    // from the ingest's own hint, so the pin holds past the size threshold
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.listenerManager.register(listener)
+    val recorded = try {
+      val rep = graft.apps.CorpusPrep.runIncremental(spark, batchDf(traceBatches(1)), store)
+      assert(rep == graft.apps.CorpusPrep.IncrementalReport(6, 6, 5, 3, 8))
+      // the listener bus delivers in order: once this marker action is
+      // seen, every action of the ingest has been recorded
+      Seq(1).toDF("__ingest_done").collect()
+      val deadline = System.nanoTime() + 30000000000L
+      def marked = { import scala.jdk.CollectionConverters._
+        actions.asScala.exists(_._2.analyzed.output.exists(_.name == "__ingest_done")) }
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(marked, "listener never saw the marker action")
+      import scala.jdk.CollectionConverters._
+      actions.asScala.toSeq.filterNot(_._2.analyzed.output.exists(_.name == "__ingest_done"))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    }
+    val fns = recorded.map(_._1)
+    assert(!fns.contains("count"), s"ingest ran count actions: $fns")
+    val checkpoints = recorded.filter(_._1 == "localCheckpoint")
+    assert(checkpoints.size == 2, s"expected two localCheckpoints: $fns")
+    val writes = recorded.flatMap { case (_, qe) =>
+      qe.executedPlan.collectFirst { case w: DataWritingCommandExec => w }.flatMap { w =>
+        w.cmd match {
+          case i: InsertIntoHadoopFsRelationCommand => Some(i.outputPath.getName -> nodes(w.child))
+          case _ => None
+        }
+      }
+    }.toMap
+    assert(Set("fp", "sig", "mh", "attrs").subsetOf(writes.keySet),
+      s"writes seen: ${writes.keySet}")
+    for (rel <- Seq("fp", "sig", "mh", "attrs"))
+      assert(!writes(rel).exists(_.isInstanceOf[Exchange]),
+        s"$rel write shuffles:\n${writes(rel).head.treeString}")
+    // the accepted checkpoint drops minhash-rejected ids through a
+    // broadcast left-anti join on doc_id
+    val rejectionJoin = checkpoints.flatMap { case (_, qe) => nodes(qe.executedPlan) }.exists {
+      case j: BroadcastHashJoinExec =>
+        j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti &&
+          j.leftKeys.flatMap(_.references.map(_.name)) == Seq("doc_id")
+      case _ => false
+    }
+    assert(rejectionJoin, "no broadcast doc_id anti-join in the candidate checkpoint")
+  }
+
   test("corpusReport: rollup levels are mutually consistent (leaves sum to subtotals sum to total)") {
     val r = Pipeline.corpusReport(docs).collect()
       .map(x => (x.getString(0), x.getString(1)) -> (x.getLong(2), x.getLong(3))).toMap
