@@ -218,7 +218,7 @@ object CorpusPrep {
   /** The corpus-GROWTH flow: ingest one new batch against a persistent
     * store without rescanning the accepted corpus —
     *
-    *   normalize → gate → exact dedup ([[Dedup.exact]] keepers vs the
+    *   normalize → gate → [[Dedup.exactIncremental]] (digest vs the
     *   (fp, keep_id) store) → SimHash-signature near-dup vs the signature
     *   store (the same online rule as `StreamOps.streamingNearDup`; full
     *   pair-verified canonicalization stays a periodic batch job — the
@@ -299,216 +299,225 @@ object CorpusPrep {
       if (tombDirs.isEmpty) rel
       else rel.join(tombIds, keeperDocId === col("__tomb_id"), "left_anti")
 
-    // raw-ingest extraction first, so every store decision (content id,
-    // line claims, fingerprints) is over what actually enters the corpus;
-    // persisted because the content-hash agg, the line-claim pass, and
-    // the survivors join each action it — without the persist an
-    // expensive extraction (HTML strip over crawl text) runs per action
-    val extracted = pre.map(f => f(batch)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      .getOrElse(batch)
-    // r17: with no `pre` hook the batch IS the extracted frame, so the
-    // report's batch size is the content-id aggregate's count — one
-    // fewer action per ingest (each action on this path is a full
-    // plan+schedule cycle; the protocol's fixed cost is action count)
-    val batchRows = if (pre.isEmpty) -1L else batch.count()
-    // deterministic content id: order-independent hash over (doc_id, text)
-    // plus the row count — a retry of the same batch lands on the same
-    // directory and repairs any crashed partial write by overwriting it.
-    // Wrapping SUM, not bit_xor: xor cancels rows repeated an even number
-    // of times, so two different all-doubled batches would collide on 0
-    // and the later one would be dropped as a replay (the appendIvfIndex
-    // fix, applied here for the same structural reason). Only the writes
-    // need it, so it runs beside the dedup stages unless it fills `pre`'s cache.
-    val idF = java.util.concurrent.CompletableFuture.supplyAsync(() => extracted
-      .agg(coalesce(sum(expr("xxhash64(doc_id, text)").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO)), count(lit(1)))
-      .collect()(0))
-    if (extracted ne batch) idF.join()
+    // everything the ingest persists or checkpoints is released on the way
+    // out, whether it commits or throws: a long-running ingest stream calls
+    // this once per micro-batch and re-runs a failing one, so whatever
+    // stayed cached would pile up (the Caches registry included)
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persisted(df: DataFrame): DataFrame = {
+      held += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); df }
+    def checkpointed(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true); checkpoints += c; c }
+    try {
+      // raw-ingest extraction first, so every store decision (content id,
+      // line claims, fingerprints) is over what actually enters the corpus;
+      // persisted because the content-hash agg, the line-claim pass, and
+      // the survivors join each action it — without the persist an
+      // expensive extraction (HTML strip over crawl text) runs per action
+      val extracted = pre.map(f => persisted(f(batch))).getOrElse(batch)
+      // r17: with no `pre` hook the batch IS the extracted frame, so the
+      // report's batch size is the content-id aggregate's count — one
+      // fewer action per ingest (each action on this path is a full
+      // plan+schedule cycle; the protocol's fixed cost is action count)
+      val batchRows = if (pre.isEmpty) -1L else batch.count()
+      // deterministic content id: order-independent hash over (doc_id, text)
+      // plus the row count — a retry of the same batch lands on the same
+      // directory and repairs any crashed partial write by overwriting it.
+      // Wrapping SUM, not bit_xor: xor cancels rows repeated an even number
+      // of times, so two different all-doubled batches would collide on 0
+      // and the later one would be dropped as a replay (the appendIvfIndex
+      // fix, applied here for the same structural reason). Only the writes
+      // need it, so it runs beside the dedup stages unless it fills `pre`'s cache.
+      val idF = java.util.concurrent.CompletableFuture.supplyAsync(() => extracted
+        .agg(coalesce(sum(expr("xxhash64(doc_id, text)").cast("decimal(38,0)")),
+          lit(java.math.BigDecimal.ZERO)), count(lit(1)))
+        .collect()(0))
+      if (extracted ne batch) idF.join()
 
-    // optional line-level dedup vs the accepted-line store (the
-    // RefinedWeb ingest treatment, batch-incrementally), on the RAW
-    // text — BEFORE normalization, which folds newlines into spaces:
-    // batch lines already claimed by ANY committed batch drop,
-    // keep-first applies within the batch, and a doc cut to zero lines
-    // drops here. The novel line claims are written to the `lfp`
-    // relation at commit time, filtered (like the doc fp store) to
-    // finally-ACCEPTED docs.
-    val (lined, lineNovel) = if (lineLevelDedup) {
-      val lfpStore = untombed(readStore("lfp", "fp BIGINT, keep_okey BIGINT"),
-        shiftrightunsigned(col("keep_okey"), 32))
-      val (cleaned, novel, _) = Dedup.lineDedupIncremental(extracted, lfpStore)
-      val survivors = extracted.drop("text")
-        .join(cleaned.filter(col("n_kept") > 0)
-          .select(col("doc_id"), col("text_clean").as("text")), Seq("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (survivors, novel)
-    } else (extracted, null)
+      // optional line-level dedup vs the accepted-line store (the
+      // RefinedWeb ingest treatment, batch-incrementally), on the RAW
+      // text — BEFORE normalization, which folds newlines into spaces:
+      // batch lines already claimed by ANY committed batch drop,
+      // keep-first applies within the batch, and a doc cut to zero lines
+      // drops here. The novel line claims are written to the `lfp`
+      // relation at commit time, filtered (like the doc fp store) to
+      // finally-ACCEPTED docs.
+      val (lined, lineNovel) = if (lineLevelDedup) {
+        val lfpStore = untombed(readStore("lfp", "fp BIGINT, keep_okey BIGINT"),
+          shiftrightunsigned(col("keep_okey"), 32))
+        val (cleaned, novel, _) = Dedup.lineDedupIncremental(extracted, lfpStore)
+        val survivors = persisted(extracted.drop("text")
+          .join(cleaned.filter(col("n_kept") > 0)
+            .select(col("doc_id"), col("text_clean").as("text")), Seq("doc_id")))
+        (survivors, novel)
+      } else (extracted, null)
 
-    // in-place normalization (see run()): the old normalizeText self-join
-    // cost a doc_id exchange of both sides per ingest for a per-row rewrite
-    val normed = lined.withColumn("text", TextAnalysis.normExpr(col("text")))
-    val nToks = size(graft.functions.Funcs.tokens(col("text"))).cast("bigint")
-    val gated = normed.filter(nToks >= minTokens && nToks <= maxTokens)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // in-place normalization (see run()): the old normalizeText self-join
+      // cost a doc_id exchange of both sides per ingest for a per-row rewrite
+      val normed = lined.withColumn("text", TextAnalysis.normExpr(col("text")))
+      val nToks = size(graft.functions.Funcs.tokens(col("text"))).cast("bigint")
+      val gated = persisted(normed.filter(nToks >= minTokens && nToks <= maxTokens))
 
-    // exact dedup vs the fp store: each fp group's first-in-batch keeper
-    // unless the store has seen the fp. The checkpoint's own action also
-    // counts the gated rows (the sum of the group sizes) and the novel fps.
-    val fpStore = untombed(readStore("fp", "fp STRING, keep_id BIGINT"), col("keep_id"))
-    val exactNovel = Dedup.exact(gated)
-      .observe("graft_ingest_gated", sum(col("dup_cnt")))
-      .select("fp", "keep_id")
-      .join(fpStore.select("fp"), Seq("fp"), "left_anti")
-      .observe("graft_ingest_novel", count(lit(1)))
-    val novelFp = exactNovel.localCheckpoint(true)
-    val gatedCount = observedCount(exactNovel, "graft_ingest_gated")
-    val novelExact = observedCount(exactNovel, "graft_ingest_novel")
-    val novelDocs = gated.join(novelFp.select(col("keep_id").as("doc_id")), Seq("doc_id"))
+      // exact dedup vs the fingerprint store (plus first-in-batch keeper),
+      // retracted keepers' claims released. The checkpoint's own action also
+      // counts the gated rows (observed over the scan of the persisted
+      // `gated`, not inside it) and the novel fps.
+      val fpStore = untombed(readStore("fp", "fp STRING, keep_id BIGINT"), col("keep_id"))
+      val exactNovel = Dedup.exactIncremental(
+          gated.observe("graft_ingest_gated", count(lit(1))), fpStore)._1
+        .observe("graft_ingest_novel", count(lit(1)))
+      val novelFp = checkpointed(exactNovel)
+      val gatedCount = observedCount(exactNovel, "graft_ingest_gated", gated)
+      val novelExact = observedCount(exactNovel, "graft_ingest_novel", novelFp)
+      val novelDocs = gated.join(novelFp.select(col("keep_id").as("doc_id")), Seq("doc_id"))
 
-    // signature near-dup: one sig per novel doc, collapse in-batch by
-    // sig (min doc_id keeper), then drop sigs the store has seen — each
-    // stored sig carries its keeper so retraction can release the claim
-    val sigStore = untombed(readStore("sig", "sig BIGINT, keep_id BIGINT"),
-      col("keep_id"))
-    val sigCands = novelDocs
-      .select(col("doc_id"), Native.simhash(Funcs.tokens(col("text"))).as("sig"))
-      .groupBy("sig").agg(min(col("doc_id")).as("doc_id"))
-      .join(sigStore, Seq("sig"), "left_anti")
+      // signature near-dup: one sig per novel doc, collapse in-batch by
+      // sig (min doc_id keeper), then drop sigs the store has seen — each
+      // stored sig carries its keeper so retraction can release the claim
+      val sigStore = untombed(readStore("sig", "sig BIGINT, keep_id BIGINT"),
+        col("keep_id"))
+      val sigCands = novelDocs
+        .select(col("doc_id"), Native.simhash(Funcs.tokens(col("text"))).as("sig"))
+        .groupBy("sig").agg(min(col("doc_id")).as("doc_id"))
+        .join(sigStore, Seq("sig"), "left_anti")
 
-    // banded-minhash near-dup vs the store: the exact-signature stage
-    // only collapses docs whose simhash is IDENTICAL (re-encodes,
-    // reorderings); a small edit changes the signature and would slip
-    // through until the periodic batch pass. Each accepted doc also
-    // stores its minhash band keys + signature (append-only, like fp/
-    // sig); a candidate colliding with a stored doc on ANY band is
-    // verified by the classic signature-agreement Jaccard estimate
-    // (matching positions / k) and rejected at ≥ nearDupJaccard. Online
-    // recall is the banding S-curve's, not exact — the pair-verified
-    // batch canonicalization remains the periodic ground truth (the
-    // documented online/offline split).
-    val mhStore = untombed(
-      readStore("mh", "band INT, bkey BIGINT, sig ARRAY<BIGINT>, keep_id BIGINT"),
-      col("keep_id"))
-    // one row per candidate doc: every gated column plus the sketches the
-    // store relations are written from; `__keep_id` is doc_id again, but
-    // nullable like its min() aggregate, as the claim schemas have it
-    val cand = gated
-      .join(sigCands.select(col("doc_id"), col("doc_id").as("__keep_id"), col("sig").as("__ssig")),
-        Seq("doc_id"))
-      .withColumn("__msig", Native.minhashFromTokens(Funcs.tokens(col("text")), 3, 16))
-      .withColumn("__bkeys", Funcs.lshBandKeys(col("__msig"), 4, 4))
-    // rejected ids are batch-bounded, so they broadcast into the anti-join;
-    // no distinct — an anti-join ignores build-side duplicates
-    val mhRejected = cand
-      .select(col("doc_id"), col("__msig"), posexplode(col("__bkeys")).as(Seq("band", "bkey")))
-      .join(mhStore, Seq("band", "bkey"))
-      .filter(
-        aggregate(zip_with(col("__msig"), col("sig"), (a, b) => when(a === b, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / 16.0 >= nearDupJaccard)
-      .select("doc_id")
-    // the second checkpoint: one row per accepted doc, counted on the way in
-    val acceptedRows = cand.join(broadcast(mhRejected), Seq("doc_id"), "left_anti")
-      .observe("graft_ingest_accepted", count(lit(1)))
-    val accepted = acceptedRows.localCheckpoint(true)
-    val acceptedCount = observedCount(acceptedRows, "graft_ingest_accepted")
+      // banded-minhash near-dup vs the store: the exact-signature stage
+      // only collapses docs whose simhash is IDENTICAL (re-encodes,
+      // reorderings); a small edit changes the signature and would slip
+      // through until the periodic batch pass. Each accepted doc also
+      // stores its minhash band keys + signature (append-only, like fp/
+      // sig); a candidate colliding with a stored doc on ANY band is
+      // verified by the classic signature-agreement Jaccard estimate
+      // (matching positions / k) and rejected at ≥ nearDupJaccard. Online
+      // recall is the banding S-curve's, not exact — the pair-verified
+      // batch canonicalization remains the periodic ground truth (the
+      // documented online/offline split).
+      val mhStore = untombed(
+        readStore("mh", "band INT, bkey BIGINT, sig ARRAY<BIGINT>, keep_id BIGINT"),
+        col("keep_id"))
+      // one row per candidate doc: every gated column plus the sketches the
+      // store relations are written from; `__keep_id` is doc_id again, but
+      // nullable like its min() aggregate, as the claim schemas have it
+      val cand = gated
+        .join(sigCands.select(col("doc_id"), col("doc_id").as("__keep_id"), col("sig").as("__ssig")),
+          Seq("doc_id"))
+        .withColumn("__msig", Native.minhashFromTokens(Funcs.tokens(col("text")), 3, 16))
+        .withColumn("__bkeys", Funcs.lshBandKeys(col("__msig"), 4, 4))
+      // rejected ids are batch-bounded, so they broadcast into the anti-join;
+      // no distinct — an anti-join ignores build-side duplicates
+      val mhRejected = cand
+        .select(col("doc_id"), col("__msig"), posexplode(col("__bkeys")).as(Seq("band", "bkey")))
+        .join(mhStore, Seq("band", "bkey"))
+        .filter(
+          aggregate(zip_with(col("__msig"), col("sig"), (a, b) => when(a === b, 1).otherwise(0)),
+            lit(0), (acc, x) => acc + x).cast("double") / 16.0 >= nearDupJaccard)
+        .select("doc_id")
+      // the second checkpoint: one row per accepted doc, counted on the way in
+      val acceptedRows = cand.join(broadcast(mhRejected), Seq("doc_id"), "left_anti")
+        .observe("graft_ingest_accepted", count(lit(1)))
+      val accepted = checkpointed(acceptedRows)
+      val acceptedCount = observedCount(acceptedRows, "graft_ingest_accepted", accepted)
 
-    // write accepted docs as this batch's shard slice, positions
-    // continuing after the stored corpus (batch-internal order = the md5
-    // hash order). The stored size comes from the committed META
-    // relations (one row per batch), coalesced to 0 over an empty store —
-    // NOT a count over the shards: a per-batch full corpus scan is
-    // exactly the rescan this operator exists to avoid at 100 TB. The
-    // collect has been running concurrently since the top of the ingest
-    // (baseF); this is the await.
-    val base = baseF.get()
-    val idRow = idF.get()
-    val extractedRows = idRow.getLong(1)
-    val batchId =
-      f"${graft.sources.BatchStore.wrap64(idRow.getDecimal(0))}%016x_$extractedRows"
-    val batchDir = s"$storeDir/batches/b_$batchId"
-    if (acceptedCount > 0) {
-      // all relations land in this batch's own (uncommitted) directory in
-      // OVERWRITE mode — a retry after a crash replaces any partial state
-      // — and the _COMMIT marker goes last, making the whole batch
-      // visible to readers atomically
-      val ordered = Pipeline.orderedShards(
-        accepted.drop("__keep_id", "__ssig", "__msig", "__bkeys"), shardSize, posBase = base)
-      // r18: EXPLICIT width on the shard-write shuffle. A keyed
-      // repartition with no width is AQE-coalescible, and the shuffled
-      // bytes are tiny, so AQE folded the write into ONE task that
-      // created every shard directory's parquet file SERIALLY — measured
-      // 0.8-0.9 s of a 2.3 s ingest (file creation is real per-task work,
-      // the one case where partition count must follow the OUTPUT unit
-      // count, not the byte size). One writer task per shard directory,
-      // capped at cluster parallelism; each task writes whole shard dirs.
-      val nShards = (base + acceptedCount - 1) / shardSize - base / shardSize + 1
-      val writeWidth = math.max(1L, math.min(nShards,
-        spark.sparkContext.defaultParallelism.toLong * 2)).toInt
-      // r17: the relation writes are mutually independent (different
-      // directories, inputs all checkpointed upstream), so they run as
-      // CONCURRENT jobs (guide §2.6 overlap-independent-jobs) — measured
-      // sequentially they cost writes' SUM per ingest while the cluster
-      // idles through each tail; concurrently they cost ~the shards write
-      // alone. The _COMMIT marker still goes strictly LAST, after every
-      // write has returned, so atomicity is untouched.
-      import spark.implicits._
-      graft.sources.BatchStore.runConcurrently(
-        Seq(
-          () => ordered
-            .repartition(writeWidth, col("shard"))
-            .sortWithinPartitions(col("shard"), col("pos"))
-            .write.partitionBy("shard").mode("overwrite").parquet(s"$batchDir/shards"),
-          () => Seq(acceptedCount).toDF("accepted")
-            .coalesce(1).write.mode("overwrite").parquet(s"$batchDir/meta"),
-          // only ACCEPTED docs' fingerprints enter the store — it tracks
-          // the accepted corpus, so a signature-rejected doc stays
-          // re-checkable. An accepted doc is its fp group's keeper, so its
-          // own text's fingerprint is the group's.
-          () => accepted
-            .select(Funcs.fingerprint(col("text")).as("fp"), col("__keep_id").as("keep_id"))
-            .write.mode("overwrite").parquet(s"$batchDir/fp"),
-          () => accepted.select(col("__ssig").as("sig"), col("__keep_id").as("keep_id"))
-            .write.mode("overwrite").parquet(s"$batchDir/sig"),
-          () => accepted.select(posexplode(col("__bkeys")).as(Seq("band", "bkey")),
-              col("__msig").as("sig"), col("__keep_id").as("keep_id"))
-            .write.mode("overwrite").parquet(s"$batchDir/mh"),
-          // Dolma-style attributes sidecar: every committed batch persists
-          // the attributeReport relation for its ACCEPTED docs (over the
-          // normalized text — the exact form that entered the corpus), so
-          // the audit sidecar grows with the store, is readable without
-          // touching shard text ([[readAttributes]]), and survives
-          // [[compactStore]] like fp/sig/mh/lfp. Map-side pass over the
-          // accepted batch only.
-          () => TextAnalysis.attributeReport(accepted.select(col("doc_id"), col("text")))
-            .write.mode("overwrite").parquet(s"$batchDir/attrs")
-        ) ++ (if (lineLevelDedup) Seq(
-          // the line-fp mirror of the doc-fp rule: only lines claimed by
-          // finally-accepted docs enter the store, so a rejected doc's
-          // lines stay claimable by a later batch
-          () => lineNovel
-            .withColumn("doc_id", shiftrightunsigned(col("keep_okey"), 32))
-            .join(accepted.select("doc_id"), Seq("doc_id"))
-            .select("fp", "keep_okey")
-            .write.mode("overwrite").parquet(s"$batchDir/lfp")) else Nil))
-      fs.create(new org.apache.hadoop.fs.Path(s"$batchDir/_COMMIT"), true).close()
+      // write accepted docs as this batch's shard slice, positions
+      // continuing after the stored corpus (batch-internal order = the md5
+      // hash order). The stored size comes from the committed META
+      // relations (one row per batch), coalesced to 0 over an empty store —
+      // NOT a count over the shards: a per-batch full corpus scan is
+      // exactly the rescan this operator exists to avoid at 100 TB. The
+      // collect has been running concurrently since the top of the ingest
+      // (baseF); this is the await.
+      val base = baseF.get()
+      val idRow = idF.get()
+      val extractedRows = idRow.getLong(1)
+      val batchId =
+        f"${graft.sources.BatchStore.wrap64(idRow.getDecimal(0))}%016x_$extractedRows"
+      val batchDir = s"$storeDir/batches/b_$batchId"
+      if (acceptedCount > 0) {
+        // all relations land in this batch's own (uncommitted) directory in
+        // OVERWRITE mode — a retry after a crash replaces any partial state
+        // — and the _COMMIT marker goes last, making the whole batch
+        // visible to readers atomically
+        val ordered = Pipeline.orderedShards(
+          accepted.drop("__keep_id", "__ssig", "__msig", "__bkeys"), shardSize, posBase = base)
+        // r18: EXPLICIT width on the shard-write shuffle. A keyed
+        // repartition with no width is AQE-coalescible, and the shuffled
+        // bytes are tiny, so AQE folded the write into ONE task that
+        // created every shard directory's parquet file SERIALLY — measured
+        // 0.8-0.9 s of a 2.3 s ingest (file creation is real per-task work,
+        // the one case where partition count must follow the OUTPUT unit
+        // count, not the byte size). One writer task per shard directory,
+        // capped at cluster parallelism; each task writes whole shard dirs.
+        val nShards = (base + acceptedCount - 1) / shardSize - base / shardSize + 1
+        val writeWidth = math.max(1L, math.min(nShards,
+          spark.sparkContext.defaultParallelism.toLong * 2)).toInt
+        // r17: the relation writes are mutually independent (different
+        // directories, inputs all checkpointed upstream), so they run as
+        // CONCURRENT jobs (guide §2.6 overlap-independent-jobs) — measured
+        // sequentially they cost writes' SUM per ingest while the cluster
+        // idles through each tail; concurrently they cost ~the shards write
+        // alone. The _COMMIT marker still goes strictly LAST, after every
+        // write has returned, so atomicity is untouched.
+        import spark.implicits._
+        graft.sources.BatchStore.runConcurrently(
+          Seq(
+            () => ordered
+              .repartition(writeWidth, col("shard"))
+              .sortWithinPartitions(col("shard"), col("pos"))
+              .write.partitionBy("shard").mode("overwrite").parquet(s"$batchDir/shards"),
+            () => Seq(acceptedCount).toDF("accepted")
+              .coalesce(1).write.mode("overwrite").parquet(s"$batchDir/meta"),
+            // only ACCEPTED docs' fingerprints enter the store — it tracks
+            // the accepted corpus, so a signature-rejected doc stays
+            // re-checkable. An accepted doc is its fp group's keeper, so its
+            // own text's fingerprint is the group's.
+            () => accepted
+              .select(Funcs.fingerprint(col("text")).as("fp"), col("__keep_id").as("keep_id"))
+              .write.mode("overwrite").parquet(s"$batchDir/fp"),
+            () => accepted.select(col("__ssig").as("sig"), col("__keep_id").as("keep_id"))
+              .write.mode("overwrite").parquet(s"$batchDir/sig"),
+            () => accepted.select(posexplode(col("__bkeys")).as(Seq("band", "bkey")),
+                col("__msig").as("sig"), col("__keep_id").as("keep_id"))
+              .write.mode("overwrite").parquet(s"$batchDir/mh"),
+            // Dolma-style attributes sidecar: every committed batch persists
+            // the attributeReport relation for its ACCEPTED docs (over the
+            // normalized text — the exact form that entered the corpus), so
+            // the audit sidecar grows with the store, is readable without
+            // touching shard text ([[readAttributes]]), and survives
+            // [[compactStore]] like fp/sig/mh/lfp. Map-side pass over the
+            // accepted batch only.
+            () => TextAnalysis.attributeReport(accepted.select(col("doc_id"), col("text")))
+              .write.mode("overwrite").parquet(s"$batchDir/attrs")
+          ) ++ (if (lineLevelDedup) Seq(
+            // the line-fp mirror of the doc-fp rule: only lines claimed by
+            // finally-accepted docs enter the store, so a rejected doc's
+            // lines stay claimable by a later batch
+            () => lineNovel
+              .withColumn("doc_id", shiftrightunsigned(col("keep_okey"), 32))
+              .join(accepted.select("doc_id"), Seq("doc_id"))
+              .select("fp", "keep_okey")
+              .write.mode("overwrite").parquet(s"$batchDir/lfp")) else Nil))
+        fs.create(new org.apache.hadoop.fs.Path(s"$batchDir/_COMMIT"), true).close()
+      }
+      IncrementalReport(if (batchRows < 0) extractedRows else batchRows, gatedCount,
+        novelExact, acceptedCount, base + acceptedCount)
+    } finally {
+      checkpoints.foreach(releaseCheckpoint)
+      held.foreach(_.unpersist())
+      Dedup.releaseCaches(spark)
     }
-    // a long-running ingest stream calls this once per micro-batch, so all
-    // it persisted (the Caches registry included) goes, or blocks pile up
-    Seq(novelFp, accepted).foreach(releaseCheckpoint)
-    gated.unpersist()
-    if (lined ne extracted) lined.unpersist()
-    if (extracted ne batch) extracted.unpersist()
-    Dedup.releaseCaches(spark)
-    IncrementalReport(if (batchRows < 0) extractedRows else batchRows, gatedCount,
-      novelExact, acceptedCount, base + acceptedCount)
   }
 
-  /** The count observation `name` collected by the action that ran `ds`;
-    * 0 when AQE pruned the observed node away over an empty input. */
-  private def observedCount(ds: DataFrame, name: String): Long =
-    ds.queryExecution.observedMetrics.get(name)
-      .filterNot(_.isNullAt(0)).map(_.getLong(0)).getOrElse(0L)
+  /** The count observation `name` collected by the action that ran
+    * `observed`, else the row count of `counted`, the materialized relation
+    * whose rows it observes. AQE loses an observation that sat in a stage
+    * it then replaced by an empty relation: the fp anti-join is pushed
+    * below the fp grouping, so on an exact replay (or an all-gated-out
+    * batch) the gated scan's whole stage is empty. Counting is exact where
+    * a 0 would drop the batch as if nothing had been accepted. */
+  private def observedCount(observed: DataFrame, name: String, counted: DataFrame): Long =
+    observed.queryExecution.observedMetrics.get(name).map(_.getLong(0))
+      .getOrElse(counted.count())
 
   /** Unpersist a `localCheckpoint`ed Dataset's RDD, which otherwise stays
     * persisted for the life of the session. */

@@ -987,15 +987,24 @@ class PipelineSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet == Set(1L, 5L, 6L))
   }
 
-  test("runIncremental leaves no persisted RDD behind: two ingests add none to the session") {
+  test("runIncremental leaves no persisted RDD behind: two ingests and a failed write add none to the session") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-leak")
     val store = s"$tmp/store"
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    graft.apps.CorpusPrep.runIncremental(spark, batchDf(traceBatches(0)), store)
-    graft.apps.CorpusPrep.runIncremental(spark, batchDf(traceBatches(1)), store,
+    def added = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    graft.apps.CorpusPrep.runIncremental(spark, batchDf(traceBatches(0)), store,
       lineLevelDedup = true, pre = Some(stripTags))
-    val added = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    val Array(batchName) = new java.io.File(s"$store/batches").list()
+    graft.apps.CorpusPrep.runIncremental(spark, batchDf(traceBatches(1)), store)
     assert(added.isEmpty, s"ingest left persisted RDDs: ${added.values.mkString(", ")}")
+    // the first batch again, into a store whose directory for it is a plain
+    // file: both checkpoints are taken, then every relation write throws
+    val failing = new java.io.File(s"$tmp/failing/batches")
+    assert(failing.mkdirs() && new java.io.File(failing, batchName).createNewFile())
+    intercept[java.io.IOException](graft.apps.CorpusPrep.runIncremental(spark,
+      batchDf(traceBatches(0)), s"$tmp/failing", lineLevelDedup = true, pre = Some(stripTags)))
+    assert(!new java.io.File(failing, s"$batchName/_COMMIT").exists())
+    assert(added.isEmpty, s"failed ingest left persisted RDDs: ${added.values.mkString(", ")}")
   }
 
   test("steady ingest into a tombstoned store: no count action, two localCheckpoints, shuffle-free relation writes, broadcast rejection anti-join") {
