@@ -2,6 +2,7 @@ package graft.apps
 
 import graft.Tables
 import graft.operators.{Dedup, Pipeline, TextAnalysis}
+import graft.sources.BatchStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -157,21 +158,6 @@ object CorpusPrep {
       accepted: Long, //     after signature near-dup vs the store
       totalStored: Long) //  cumulative corpus rows after this batch
 
-  /** Committed, non-superseded batch directories — the only state any
-    * store reader sees. A committed compaction directory lists the
-    * source directories it replaced in its `_COMPACTED_FROM` manifest;
-    * those are excluded here even if still on disk, which is what makes
-    * [[compactStore]]'s commit atomic (deleting sources afterwards is
-    * mere garbage collection). */
-  private def committedBatches(spark: SparkSession, storeDir: String): Seq[String] =
-    graft.sources.BatchStore.committedDirs(spark, storeDir)
-
-  /** Union-read relation `name` across the given batch dirs with an
-    * explicit schema; empty DataFrame when no dir carries it. */
-  private def readStoreIn(spark: SparkSession, dirs: Seq[String],
-      name: String, ddl: String): DataFrame =
-    graft.sources.BatchStore.readRelation(spark, dirs, name, ddl)
-
   /** Continuous ingestion: a file-watching stream over `inDir` (JSONL
     * drops) drives [[runIncremental]] once per micro-batch via
     * foreachBatch — Structured Streaming supplies file discovery,
@@ -225,23 +211,16 @@ object CorpusPrep {
     *   documented online/offline recall split) → banded-minhash near-dup
     *   vs the `mh` store → append to train shards.
     *
-    * Store layout under `storeDir`: `batches/b_<batchId>/{shards,fp,sig,
-    * mh,attrs,meta,lfp}` plus an empty `_COMMIT` marker written LAST — one
-    * directory per ingested batch holding that batch's accepted content
+    * Store layout under `storeDir`: one [[BatchStore]] batch
+    * `batches/b_<contenthash>_<n>/{shards,fp,sig,mh,attrs,meta,lfp}` per
+    * ingest that accepts anything, holding that batch's accepted content
     * fingerprints (`fp`), simhash signatures (`sig`), minhash band keys
     * + signatures (`mh`, the banded near-dup probe), pos-ordered
     * training shards (`shards`), and one accepted-count row (`meta`, so
     * the stored-corpus size is a tiny-relation sum rather than a shard
-    * rescan). Readers union only COMMITTED batch directories, which makes
-    * the multi-relation append atomic without a transaction log:
-    * `batchId` is a deterministic content hash of the batch, so a crash
-    * between the writes leaves an uncommitted directory that (a) no
-    * reader ever sees and (b) the retry of the same batch OVERWRITES
-    * in-place before committing. Replaying an already-committed batch is
-    * idempotent by construction — every fingerprint anti-joins away,
-    * nothing is written, and the shards are byte-identical (pinned by
-    * test). Single-writer by design (like any append-only ingest log);
-    * concurrent ingests would need an external lock.
+    * rescan). Atomicity and crash repair are the [[BatchStore]] protocol's.
+    * Replaying an already-committed batch writes nothing (its content id
+    * is committed), so the shards stay byte-identical (pinned by test).
     *
     * New docs take positions `totalStored … totalStored+n-1` — within a
     * batch in the same deterministic md5 order as
@@ -272,11 +251,7 @@ object CorpusPrep {
       lineLevelDedup: Boolean = false,
       pre: Option[DataFrame => DataFrame] = None): IncrementalReport = {
     import graft.functions.{Funcs, Native}
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = committedBatches(spark, storeDir)
-    def readStore(name: String, ddl: String): DataFrame =
-      readStoreIn(spark, committed, name, ddl)
+    val store = BatchStore.snapshot(spark, storeDir)
     // r18: the stored-corpus position base depends only on the COMMITTED
     // meta relations — none of this ingest's work — so its collect runs as
     // a concurrent job from the start and is awaited only when the shard
@@ -284,20 +259,12 @@ object CorpusPrep {
     // driver calls them sequentially). On the action-count-bound protocol
     // path this hides one full plan+schedule cycle per ingest.
     val baseF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-      readStore("meta", "accepted BIGINT")
+      store.read("meta", "accepted BIGINT")
         .agg(coalesce(sum(col("accepted")), lit(0L))).collect()(0).getLong(0))
     // committed retractions release the claims of removed docs: every
-    // probe relation (fp/lfp/sig/mh) anti-joins tombstoned keepers below,
-    // so content re-ingested AFTER a takedown is accepted afresh instead
-    // of silently deduped against removed text. Skipped on a
-    // tombstone-free store so the common-case plan is unchanged. The
-    // tombstones are read once, from the `committed` snapshot.
-    val tombDirs = graft.sources.BatchStore.dirsWithRelation(spark, committed, "tomb")
-    lazy val tombIds = broadcast(readStoreIn(spark, tombDirs, "tomb", "id BIGINT"))
-      .select(col("id").as("__tomb_id"))
-    def untombed(rel: DataFrame, keeperDocId: org.apache.spark.sql.Column): DataFrame =
-      if (tombDirs.isEmpty) rel
-      else rel.join(tombIds, keeperDocId === col("__tomb_id"), "left_anti")
+    // probe relation (fp/lfp/sig/mh) drops tombstoned keepers below, so
+    // content re-ingested AFTER a takedown is accepted afresh instead of
+    // silently deduped against removed text
 
     // everything the ingest persists or checkpoints is released on the way
     // out, whether it commits or throws: a long-running ingest stream calls
@@ -321,18 +288,10 @@ object CorpusPrep {
       // fewer action per ingest (each action on this path is a full
       // plan+schedule cycle; the protocol's fixed cost is action count)
       val batchRows = if (pre.isEmpty) -1L else batch.count()
-      // deterministic content id: order-independent hash over (doc_id, text)
-      // plus the row count — a retry of the same batch lands on the same
-      // directory and repairs any crashed partial write by overwriting it.
-      // Wrapping SUM, not bit_xor: xor cancels rows repeated an even number
-      // of times, so two different all-doubled batches would collide on 0
-      // and the later one would be dropped as a replay (the appendIvfIndex
-      // fix, applied here for the same structural reason). Only the writes
-      // need it, so it runs beside the dedup stages unless it fills `pre`'s cache.
-      val idF = java.util.concurrent.CompletableFuture.supplyAsync(() => extracted
-        .agg(coalesce(sum(expr("xxhash64(doc_id, text)").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO)), count(lit(1)))
-        .collect()(0))
+      // the batch's content id over (doc_id, text): only the writes need it,
+      // so it runs beside the dedup stages unless it fills `pre`'s cache
+      val idF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+        BatchStore.contentId("b", extracted, "doc_id", "text"))
       if (extracted ne batch) idF.join()
 
       // optional line-level dedup vs the accepted-line store (the
@@ -344,7 +303,7 @@ object CorpusPrep {
       // relation at commit time, filtered (like the doc fp store) to
       // finally-ACCEPTED docs.
       val (lined, lineNovel) = if (lineLevelDedup) {
-        val lfpStore = untombed(readStore("lfp", "fp BIGINT, keep_okey BIGINT"),
+        val lfpStore = store.live(store.read("lfp", "fp BIGINT, keep_okey BIGINT"),
           shiftrightunsigned(col("keep_okey"), 32))
         val (cleaned, novel, _) = Dedup.lineDedupIncremental(extracted, lfpStore)
         val survivors = persisted(extracted.drop("text")
@@ -363,7 +322,7 @@ object CorpusPrep {
       // retracted keepers' claims released. The checkpoint's own action also
       // counts the gated rows (observed over the scan of the persisted
       // `gated`, not inside it) and the novel fps.
-      val fpStore = untombed(readStore("fp", "fp STRING, keep_id BIGINT"), col("keep_id"))
+      val fpStore = store.live(store.read("fp", "fp STRING, keep_id BIGINT"), col("keep_id"))
       val exactNovel = Dedup.exactIncremental(
           gated.observe("graft_ingest_gated", count(lit(1))), fpStore)._1
         .observe("graft_ingest_novel", count(lit(1)))
@@ -375,7 +334,7 @@ object CorpusPrep {
       // signature near-dup: one sig per novel doc, collapse in-batch by
       // sig (min doc_id keeper), then drop sigs the store has seen — each
       // stored sig carries its keeper so retraction can release the claim
-      val sigStore = untombed(readStore("sig", "sig BIGINT, keep_id BIGINT"),
+      val sigStore = store.live(store.read("sig", "sig BIGINT, keep_id BIGINT"),
         col("keep_id"))
       val sigCands = novelDocs
         .select(col("doc_id"), Native.simhash(Funcs.tokens(col("text"))).as("sig"))
@@ -393,8 +352,8 @@ object CorpusPrep {
       // recall is the banding S-curve's, not exact — the pair-verified
       // batch canonicalization remains the periodic ground truth (the
       // documented online/offline split).
-      val mhStore = untombed(
-        readStore("mh", "band INT, bkey BIGINT, sig ARRAY<BIGINT>, keep_id BIGINT"),
+      val mhStore = store.live(
+        store.read("mh", "band INT, bkey BIGINT, sig ARRAY<BIGINT>, keep_id BIGINT"),
         col("keep_id"))
       // one row per candidate doc: every gated column plus the sketches the
       // store relations are written from; `__keep_id` is doc_id again, but
@@ -428,16 +387,10 @@ object CorpusPrep {
       // collect has been running concurrently since the top of the ingest
       // (baseF); this is the await.
       val base = baseF.get()
-      val idRow = idF.get()
-      val extractedRows = idRow.getLong(1)
-      val batchId =
-        f"${graft.sources.BatchStore.wrap64(idRow.getDecimal(0))}%016x_$extractedRows"
-      val batchDir = s"$storeDir/batches/b_$batchId"
-      if (acceptedCount > 0) {
-        // all relations land in this batch's own (uncommitted) directory in
-        // OVERWRITE mode — a retry after a crash replaces any partial state
-        // — and the _COMMIT marker goes last, making the whole batch
-        // visible to readers atomically
+      val batchId = idF.get()
+      // a committed batch id is a replay and appends nothing, even where a
+      // retraction released some of its own claims since it was committed
+      val added = if (acceptedCount == 0) 0L else {
         val ordered = Pipeline.orderedShards(
           accepted.drop("__keep_id", "__ssig", "__msig", "__bkeys"), shardSize, posBase = base)
         // r18: EXPLICIT width on the shard-write shuffle. A keyed
@@ -451,56 +404,46 @@ object CorpusPrep {
         val nShards = (base + acceptedCount - 1) / shardSize - base / shardSize + 1
         val writeWidth = math.max(1L, math.min(nShards,
           spark.sparkContext.defaultParallelism.toLong * 2)).toInt
-        // r17: the relation writes are mutually independent (different
-        // directories, inputs all checkpointed upstream), so they run as
-        // CONCURRENT jobs (guide §2.6 overlap-independent-jobs) — measured
-        // sequentially they cost writes' SUM per ingest while the cluster
-        // idles through each tail; concurrently they cost ~the shards write
-        // alone. The _COMMIT marker still goes strictly LAST, after every
-        // write has returned, so atomicity is untouched.
         import spark.implicits._
-        graft.sources.BatchStore.runConcurrently(
-          Seq(
-            () => ordered
-              .repartition(writeWidth, col("shard"))
-              .sortWithinPartitions(col("shard"), col("pos"))
-              .write.partitionBy("shard").mode("overwrite").parquet(s"$batchDir/shards"),
-            () => Seq(acceptedCount).toDF("accepted")
-              .coalesce(1).write.mode("overwrite").parquet(s"$batchDir/meta"),
-            // only ACCEPTED docs' fingerprints enter the store — it tracks
-            // the accepted corpus, so a signature-rejected doc stays
-            // re-checkable. An accepted doc is its fp group's keeper, so its
-            // own text's fingerprint is the group's.
-            () => accepted
-              .select(Funcs.fingerprint(col("text")).as("fp"), col("__keep_id").as("keep_id"))
-              .write.mode("overwrite").parquet(s"$batchDir/fp"),
-            () => accepted.select(col("__ssig").as("sig"), col("__keep_id").as("keep_id"))
-              .write.mode("overwrite").parquet(s"$batchDir/sig"),
-            () => accepted.select(posexplode(col("__bkeys")).as(Seq("band", "bkey")),
-                col("__msig").as("sig"), col("__keep_id").as("keep_id"))
-              .write.mode("overwrite").parquet(s"$batchDir/mh"),
-            // Dolma-style attributes sidecar: every committed batch persists
-            // the attributeReport relation for its ACCEPTED docs (over the
-            // normalized text — the exact form that entered the corpus), so
-            // the audit sidecar grows with the store, is readable without
-            // touching shard text ([[readAttributes]]), and survives
-            // [[compactStore]] like fp/sig/mh/lfp. Map-side pass over the
-            // accepted batch only.
-            () => TextAnalysis.attributeReport(accepted.select(col("doc_id"), col("text")))
-              .write.mode("overwrite").parquet(s"$batchDir/attrs")
-          ) ++ (if (lineLevelDedup) Seq(
-            // the line-fp mirror of the doc-fp rule: only lines claimed by
-            // finally-accepted docs enter the store, so a rejected doc's
-            // lines stay claimable by a later batch
-            () => lineNovel
-              .withColumn("doc_id", shiftrightunsigned(col("keep_okey"), 32))
-              .join(accepted.select("doc_id"), Seq("doc_id"))
-              .select("fp", "keep_okey")
-              .write.mode("overwrite").parquet(s"$batchDir/lfp")) else Nil))
-        fs.create(new org.apache.hadoop.fs.Path(s"$batchDir/_COMMIT"), true).close()
+        val relations = Seq(
+          "shards" -> (() => ordered
+            .repartition(writeWidth, col("shard"))
+            .sortWithinPartitions(col("shard"), col("pos"))
+            .write.partitionBy("shard")),
+          "meta" -> (() => Seq(acceptedCount).toDF("accepted").coalesce(1).write),
+          // only ACCEPTED docs' fingerprints enter the store — it tracks
+          // the accepted corpus, so a signature-rejected doc stays
+          // re-checkable. An accepted doc is its fp group's keeper, so its
+          // own text's fingerprint is the group's.
+          "fp" -> (() => accepted
+            .select(Funcs.fingerprint(col("text")).as("fp"), col("__keep_id").as("keep_id"))
+            .write),
+          "sig" -> (() => accepted.select(col("__ssig").as("sig"), col("__keep_id").as("keep_id"))
+            .write),
+          "mh" -> (() => accepted.select(posexplode(col("__bkeys")).as(Seq("band", "bkey")),
+              col("__msig").as("sig"), col("__keep_id").as("keep_id")).write),
+          // Dolma-style attributes sidecar: every committed batch persists
+          // the attributeReport relation for its ACCEPTED docs (over the
+          // normalized text — the exact form that entered the corpus), so
+          // the audit sidecar grows with the store, is readable without
+          // touching shard text ([[readAttributes]]), and survives
+          // [[compactStore]] like fp/sig/mh/lfp. Map-side pass over the
+          // accepted batch only.
+          "attrs" -> (() => TextAnalysis
+            .attributeReport(accepted.select(col("doc_id"), col("text"))).write)
+        ) ++ (if (lineLevelDedup) Seq(
+          // the line-fp mirror of the doc-fp rule: only lines claimed by
+          // finally-accepted docs enter the store, so a rejected doc's
+          // lines stay claimable by a later batch
+          "lfp" -> (() => lineNovel
+            .withColumn("doc_id", shiftrightunsigned(col("keep_okey"), 32))
+            .join(accepted.select("doc_id"), Seq("doc_id"))
+            .select("fp", "keep_okey")
+            .write)) else Nil)
+        if (BatchStore.append(spark, storeDir, batchId, relations)) acceptedCount else 0L
       }
-      IncrementalReport(if (batchRows < 0) extractedRows else batchRows, gatedCount,
-        novelExact, acceptedCount, base + acceptedCount)
+      IncrementalReport(if (batchRows < 0) batchId.rows else batchRows, gatedCount,
+        novelExact, added, base + added)
     } finally {
       checkpoints.foreach(releaseCheckpoint)
       held.foreach(_.unpersist())
@@ -527,18 +470,16 @@ object CorpusPrep {
   }
 
   /** Retract documents from the store (takedown / robots revocation):
-    * appends a committed TOMBSTONE batch ([[graft.sources.BatchStore
-    * .appendTombstones]]) whose ids every reader anti-joins from that
-    * commit on — [[readShards]], [[readAttributes]], and ALL FOUR claim
-    * stores ([[runIncremental]]'s `fp`/`lfp`/`sig`/`mh` probes, each row
+    * appends a committed TOMBSTONE batch ([[BatchStore.appendTombstones]])
+    * whose ids every reader anti-joins from that commit on —
+    * [[readShards]], [[readAttributes]], and ALL FOUR claim stores
+    * ([[runIncremental]]'s `fp`/`lfp`/`sig`/`mh` probes, each row
     * of which carries its keeper's doc_id for exactly this), so content
     * re-ingested AFTER a retraction is accepted afresh rather than
     * silently deduped against removed text. [[compactStore]] later makes
     * the absence PHYSICAL across shards/attrs/fp/lfp/sig/mh and consumes
-    * the tombstones. Retraction is id-sized both ways: the tombstone
-    * relation broadcasts into every anti-join, and no reader plan changes
-    * shape on a tombstone-free store. Returns false when `docIds` is
-    * empty or this exact retraction set is a replay.
+    * the tombstones. Returns false when `docIds` is empty or this exact
+    * retraction set is a replay.
     *
     * ID-SUPPRESSION CONTRACT: tombstones filter by doc_id with no notion
     * of time, so a retracted id stays suppressed until the next
@@ -552,7 +493,7 @@ object CorpusPrep {
     * must compact between a retraction and a same-id re-ingest, or the
     * re-ingest is swallowed. */
   def retract(spark: SparkSession, storeDir: String, docIds: DataFrame): Boolean =
-    graft.sources.BatchStore.appendTombstones(spark, storeDir, docIds)
+    BatchStore.appendTombstones(spark, storeDir, docIds)
 
   /** [[retract]] by PREDICATE — the form takedowns actually arrive in
     * ("this domain revoked robots", "urls matching X", "everything we
@@ -563,13 +504,13 @@ object CorpusPrep {
     * gopher_keep, stopword_ratio, …), so quality- and classifier-level
     * takedowns need no extra scan of their own; on a shard-column name
     * collision the shard column wins (the sidecar copy is dropped). The
-    * join is doc_id-equi over two already-committed relations and
-    * nothing is ever collected to the driver. Returns false when nothing
-    * matches. */
+    * join is doc_id-equi over one snapshot's relations and nothing is
+    * ever collected to the driver. Returns false when nothing matches. */
   def retractWhere(spark: SparkSession, storeDir: String,
       predicate: org.apache.spark.sql.Column): Boolean = {
-    val shards = readShards(spark, storeDir)
-    val attrs = readAttributes(spark, storeDir)
+    val store = BatchStore.snapshot(spark, storeDir)
+    val shards = readShards(store)
+    val attrs = readAttributes(store)
     // left join: a doc missing its sidecar row stays retractable by
     // shard predicates (its attrs columns read null)
     val sidecar = attrs.columns
@@ -589,59 +530,41 @@ object CorpusPrep {
     * compaction folds it back to one). */
   def describeStore(spark: SparkSession, storeDir: String): DataFrame = {
     import spark.implicits._
-    val rows = committedBatches(spark, storeDir).map { d =>
+    val rows = BatchStore.committedDirs(spark, storeDir).map { d =>
       val name = new org.apache.hadoop.fs.Path(d).getName
       val kind =
         if (name.startsWith("t_")) "retraction"
         else if (name.startsWith("c_")) "compacted"
         else "data"
       val relations = Seq("shards", "fp", "sig", "mh", "lfp", "attrs", "meta", "tomb")
-        .filter(r => graft.sources.BatchStore.hasRelation(spark, d, r))
+        .filter(r => BatchStore.hasRelation(spark, d, r))
       val accepted =
         if (relations.contains("meta"))
-          graft.sources.BatchStore.readRelation(spark, Seq(d), "meta", "accepted BIGINT")
+          BatchStore.readRelation(spark, Seq(d), "meta", "accepted BIGINT")
             .agg(coalesce(sum(col("accepted")), lit(0L))).collect()(0).getLong(0)
         else 0L
       val retracted =
         if (relations.contains("tomb"))
-          graft.sources.BatchStore.readRelation(spark, Seq(d), "tomb", "id BIGINT").count()
+          BatchStore.readRelation(spark, Seq(d), "tomb", "id BIGINT").count()
         else 0L
       (name, kind, relations.mkString(","), accepted, retracted)
     }
     rows.toDF("batch", "kind", "relations", "accepted", "retracted")
   }
 
-  /** The store's committed tombstoned doc_ids (empty when none). */
-  private def tombstones(spark: SparkSession, storeDir: String): DataFrame =
-    graft.sources.BatchStore.readTombstones(spark, storeDir)
-      .select(col("id").as("doc_id"))
-  private def hasTombstones(spark: SparkSession, storeDir: String): Boolean =
-    graft.sources.BatchStore
-      .dirsWithRelation(spark, committedBatches(spark, storeDir), "tomb").nonEmpty
+  /** The stored corpus as one DataFrame — the union of one snapshot's
+    * committed batches' shard slices minus its retractions
+    * ([[BatchStore.Snapshot]]). This is the reader every consumer of a
+    * [[runIncremental]] store should use; reading `storeDir` recursively
+    * would see partial state. One scan node per batch is fine at an ingest
+    * cadence; [[compactStore]] is the periodic pass that folds them back
+    * to one. */
+  def readShards(spark: SparkSession, storeDir: String): DataFrame =
+    readShards(BatchStore.snapshot(spark, storeDir))
 
-  /** The stored corpus as one DataFrame — the union of every COMMITTED,
-    * non-superseded batch's shard slice (uncommitted crash leftovers and
-    * compacted-away sources are invisible), minus any committed
-    * retractions ([[retract]] — the anti-join is id-sized and broadcast,
-    * and is skipped entirely on a tombstone-free store so the plan shape
-    * is unchanged for the common case). This is the reader every
-    * consumer of a [[runIncremental]] store should use; reading
-    * `storeDir` recursively would see partial state. */
-  def readShards(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = committedBatches(spark, storeDir)
-    val paths = graft.sources.BatchStore.dirsWithRelation(spark, dirs, "shards")
-      .map(d => s"$d/shards")
-    require(paths.nonEmpty, s"no committed data batches under $storeDir/batches")
-    // per-batch reads unioned by name: each batch dir carries its own
-    // shard=N partition layout, so a multi-root read would need a common
-    // basePath that the b_<id> level breaks. One scan node per batch is
-    // fine at an ingest cadence; [[compactStore]] is the periodic pass
-    // that folds them back to one.
-    val all = paths.map(p => spark.read.parquet(p)).reduce(_.unionByName(_))
-    if (hasTombstones(spark, storeDir))
-      all.join(tombstones(spark, storeDir), Seq("doc_id"), "left_anti")
-    else all
-  }
+  /** [[readShards]] of one store snapshot. */
+  private[graft] def readShards(store: BatchStore.Snapshot): DataFrame =
+    store.live(store.readEach("shards"), col("doc_id"))
 
   /** The attributes-sidecar schema ([[TextAnalysis.attributeReport]]'s
     * output shape), pinned so store reads never infer. */
@@ -655,34 +578,12 @@ object CorpusPrep {
     * retractions (the sidecar describes removed text, so it must go with
     * it). Lets audits and threshold tuning run over the tiny attributes
     * relation without ever scanning shard text. */
-  def readAttributes(spark: SparkSession, storeDir: String): DataFrame = {
-    val attrs = readStoreIn(spark, committedBatches(spark, storeDir), "attrs", AttrsDdl)
-    if (hasTombstones(spark, storeDir))
-      attrs.join(tombstones(spark, storeDir), Seq("doc_id"), "left_anti")
-    else attrs
-  }
+  def readAttributes(spark: SparkSession, storeDir: String): DataFrame =
+    readAttributes(BatchStore.snapshot(spark, storeDir))
 
-  /** Fold every committed batch into ONE batch directory — the periodic
-    * maintenance pass that keeps [[readShards]] (and the fp/sig/mh probe
-    * reads) at one scan node regardless of how many ingest batches have
-    * accumulated. Returns the number of source batches folded (0 = store
-    * had ≤ 1 active batch; nothing was written).
-    *
-    * Crash safety uses SUPERSESSION, not ordering: the compacted
-    * directory (deterministic name from the sorted source list, so a
-    * retry overwrites the same dir) records its sources in a
-    * `_COMPACTED_FROM` manifest written before its `_COMMIT`. Readers
-    * ([[committedBatches]]) skip any committed directory named by
-    * another committed directory's manifest, so the single `_COMMIT`
-    * create atomically swaps N sources for their union — there is no
-    * window where readers see both or neither. A crash before the commit
-    * leaves the originals authoritative; deleting the sources afterwards
-    * (`gc = true`) is pure garbage collection that can crash or be
-    * skipped with no correctness effect.
-    *
-    * Positions/shards are copied verbatim (they are already globally
-    * assigned and disjoint across batches), re-clustered by shard so the
-    * compacted layout is one pos-sorted partition tree. */
+  private def readAttributes(store: BatchStore.Snapshot): DataFrame =
+    store.live(store.read("attrs", AttrsDdl), col("doc_id"))
+
   /** Smallest shardSize any writer uses (runIncremental's default) —
     * compaction derives its shard-count BOUND from the position
     * high-water mark with this floor, since shardSize itself is not
@@ -690,107 +591,73 @@ object CorpusPrep {
     * the rewrite width (a perf shading, never correctness). */
   private val ShardSizeFloor = 64L
 
-  def compactStore(spark: SparkSession, storeDir: String, gc: Boolean = true): Int = {
-    val all = committedBatches(spark, storeDir)
-    // retraction batches fold IN, not alongside: their ids are dropped
-    // PHYSICALLY from every doc-keyed relation below and the consumed
-    // tombstone dirs are deleted outright (not superseded — a crash
-    // between the compacted commit and this GC leaves them active, which
-    // merely re-filters ids that are already physically absent)
-    val (tombDirs, sources) =
-      all.partition(p => graft.sources.BatchStore.hasRelation(spark, p, "tomb"))
-    if (sources.isEmpty || (sources.length <= 1 && tombDirs.isEmpty)) return 0
-    // same structural broadcast stance as BatchStore.readTombstones: the
-    // physical drop below anti-joins an id-sized set into corpus scans
-    val tombs = broadcast(graft.sources.BatchStore
-      .readRelation(spark, tombDirs, "tomb", "id BIGINT"))
-    def drop(rel: DataFrame, keeperDocId: org.apache.spark.sql.Column): DataFrame =
-      if (tombDirs.isEmpty) rel
-      else rel.join(tombs.select(col("id").as("__tomb_id")),
-        keeperDocId === col("__tomb_id"), "left_anti")
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names = sources.map(p => new org.apache.hadoop.fs.Path(p).getName).sorted
-    val cid = java.security.MessageDigest.getInstance("MD5")
-      .digest(names.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = s"$storeDir/batches/c_$cid"
-    // r17: the per-relation rewrites are mutually independent (disjoint
-    // output directories, committed-source inputs), so they run as
-    // concurrent jobs (guide §2.6) — the shards re-cluster dominates and
-    // the small relations fold in its shadow. `_COMPACTED_FROM` and
-    // `_COMMIT` still go strictly after all of them.
-    val lfpPresent = sources.exists { p =>
-      val path = new org.apache.hadoop.fs.Path(s"$p/lfp")
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
-    }
-    // meta stays the CUMULATIVE accepted count even when retractions
-    // shrank the corpus: it is the position high-water mark the next
-    // batch's `pos` values continue after — positions are never reused,
-    // a retraction leaves pos holes (repack via Pipeline materialization
-    // if a loader needs density). r18: the collect runs as a concurrent
-    // job (it reads only committed meta relations) and the two thunks
-    // that need it — the meta write, and the shard re-cluster's width —
-    // await it inside the concurrent batch instead of serializing the
-    // whole compaction behind it.
-    val totalF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-      readStoreIn(spark, sources, "meta", "accepted BIGINT")
-        .agg(coalesce(sum(col("accepted")), lit(0L))).collect()(0).getLong(0))
-    // r18: explicit width on the shard re-cluster (see runIncremental —
-    // the AQE-coalesced keyed repartition serialized ~40 shard-dir file
-    // creations into one task: 2.1 s of a 3.2 s compaction). One writer
-    // per shard directory, capped at cluster parallelism; the shard
-    // count bound comes from the position high-water mark, which ≥ the
-    // live shard count by construction.
-    def compactWidth = math.max(1L, math.min(
-      totalF.get() / math.max(1L, ShardSizeFloor) + 1L,
-      spark.sparkContext.defaultParallelism.toLong * 2)).toInt
-    import spark.implicits._
-    graft.sources.BatchStore.runConcurrently(
+  /** Fold every committed batch into ONE batch directory — the periodic
+    * maintenance pass that keeps [[readShards]] (and the fp/sig/mh probe
+    * reads) at one scan node regardless of how many ingest batches have
+    * accumulated — through [[BatchStore.compact]], whose supersession
+    * makes the swap atomic. Committed retractions fold IN: their doc_ids
+    * drop physically from every doc-keyed relation and the consumed
+    * tombstones are deleted; `gc = false` keeps the superseded sources on
+    * disk. Returns the number of source batches folded (0 = store had ≤ 1
+    * active batch and no retraction; nothing was written).
+    *
+    * Positions/shards are copied verbatim (they are already globally
+    * assigned and disjoint across batches), re-clustered by shard so the
+    * compacted layout is one pos-sorted partition tree. */
+  def compactStore(spark: SparkSession, storeDir: String, gc: Boolean = true): Int =
+    BatchStore.compact(spark, storeDir, gc) { store =>
+      val sources = store.dataDirs
+      // meta stays the CUMULATIVE accepted count even when retractions
+      // shrank the corpus: it is the position high-water mark the next
+      // batch's `pos` values continue after — positions are never reused,
+      // a retraction leaves pos holes (repack via Pipeline materialization
+      // if a loader needs density). r18: the collect runs as a concurrent
+      // job (it reads only committed meta relations) and the two writers
+      // that need it — the meta write, and the shard re-cluster's width —
+      // await it inside the concurrent batch instead of serializing the
+      // whole compaction behind it.
+      val totalF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+        store.read("meta", "accepted BIGINT")
+          .agg(coalesce(sum(col("accepted")), lit(0L))).collect()(0).getLong(0))
+      // r18: explicit width on the shard re-cluster (see runIncremental —
+      // the AQE-coalesced keyed repartition serialized ~40 shard-dir file
+      // creations into one task: 2.1 s of a 3.2 s compaction). One writer
+      // per shard directory, capped at cluster parallelism; the shard
+      // count bound comes from the position high-water mark, which ≥ the
+      // live shard count by construction.
+      def compactWidth = math.max(1L, math.min(
+        totalF.get() / math.max(1L, ShardSizeFloor) + 1L,
+        spark.sparkContext.defaultParallelism.toLong * 2)).toInt
+      import spark.implicits._
       Seq(
-        () => drop(sources.map(p => spark.read.parquet(s"$p/shards")).reduce(_.unionByName(_)),
-            col("doc_id"))
+        "shards" -> (() => store.live(store.readEach("shards"), col("doc_id"))
           .repartition(compactWidth, col("shard"))
           .sortWithinPartitions(col("shard"), col("pos"))
-          .write.partitionBy("shard").mode("overwrite").parquet(s"$dir/shards"),
-        () => Seq(totalF.get()).toDF("accepted")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"),
-        () => drop(readStoreIn(spark, sources, "fp", "fp STRING, keep_id BIGINT"), col("keep_id"))
-          .write.mode("overwrite").parquet(s"$dir/fp"),
+          .write.partitionBy("shard")),
+        "meta" -> (() => Seq(totalF.get()).toDF("accepted").coalesce(1).write),
+        "fp" -> (() => store.live(store.read("fp", "fp STRING, keep_id BIGINT"), col("keep_id"))
+          .write),
         // the near-dup claim relations drop their retracted keepers like
         // fp/lfp do (each row carries keep_id for exactly this); batches
         // written before the keep_id column read it as null, which no
         // tombstone id equals — their claims survive until a periodic batch
         // canonicalization rebuild
-        () => drop(readStoreIn(spark, sources, "sig", "sig BIGINT, keep_id BIGINT"),
-            col("keep_id"))
-          .write.mode("overwrite").parquet(s"$dir/sig"),
-        () => drop(readStoreIn(spark, sources, "mh",
-            "band INT, bkey BIGINT, sig ARRAY<BIGINT>, keep_id BIGINT"), col("keep_id"))
-          .write.mode("overwrite").parquet(s"$dir/mh"),
+        "sig" -> (() => store.live(store.read("sig", "sig BIGINT, keep_id BIGINT"),
+          col("keep_id")).write),
+        "mh" -> (() => store.live(store.read("mh",
+          "band INT, bkey BIGINT, sig ARRAY<BIGINT>, keep_id BIGINT"), col("keep_id")).write),
         // attributes sidecar folds like the probe relations (batches
         // predating the sidecar simply contribute no rows)
-        () => drop(readStoreIn(spark, sources, "attrs", AttrsDdl), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$dir/attrs")
-      ) ++ (if (lfpPresent) Seq(
+        "attrs" -> (() => store.live(store.read("attrs", AttrsDdl), col("doc_id")).write)
+      ) ++ (if (sources.exists(BatchStore.hasRelation(spark, _, "lfp"))) Seq(
         // line-claim store: only written when some source batch ran with
         // lineLevelDedup — an empty union writes an empty (but present)
-        // relation, which readStoreIn reads back as empty; skipping the
-        // write entirely when NO source carries lfp keeps a line-dedup-free
-        // store free of the relation
-        () => drop(readStoreIn(spark, sources, "lfp", "fp BIGINT, keep_okey BIGINT"),
-            shiftrightunsigned(col("keep_okey"), 32))
-          .write.mode("overwrite").parquet(s"$dir/lfp")) else Nil))
-    val manifest = fs.create(new org.apache.hadoop.fs.Path(s"$dir/_COMPACTED_FROM"), true)
-    try manifest.write((names.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally manifest.close()
-    fs.create(new org.apache.hadoop.fs.Path(s"$dir/_COMMIT"), true).close()
-    // consumed tombstones always go (their absence is now physical);
-    // superseded sources go under the gc flag as before
-    tombDirs.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    if (gc) sources.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    sources.length
-  }
+        // relation, which a read returns as empty; skipping the write
+        // entirely when NO source carries lfp keeps a line-dedup-free store
+        // free of the relation
+        "lfp" -> (() => store.live(store.read("lfp", "fp BIGINT, keep_okey BIGINT"),
+          shiftrightunsigned(col("keep_okey"), 32)).write)) else Nil)
+    }
 }
 
 /** CLI: `sbt "runMain graft.apps.CorpusPrepMain /root/testdata/sf0.001 /tmp/out"` */

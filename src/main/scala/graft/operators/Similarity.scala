@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Native
+import graft.sources.BatchStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -406,7 +407,7 @@ object Similarity {
   }
 
   // ---------------------------------------------------------------------
-  // Incremental IVF index — append-only batches, _COMMIT protocol
+  // Incremental IVF index — append-only batches (graft.sources.BatchStore)
   // ---------------------------------------------------------------------
 
   private def centroidsDf(spark: SparkSession, cents: Array[Array[Float]]): DataFrame = {
@@ -454,15 +455,15 @@ object Similarity {
 
   /** Append one embedding batch to an incremental IVF index — the
     * append-only growth path [[writeIvfIndex]] lacks (write-once means a
-    * growing corpus would rebuild the whole index per ingest). Uses the
-    * corpus store's batch protocol ([[graft.sources.BatchStore]]): the
-    * batch lands in its own `batches/b_<contentHash>` directory carrying
-    * its rows bucket-partitioned under `data/` AND the centroids that
-    * bucketing used under `centroids/`, with the `_COMMIT` marker written
-    * last. Batch id is a content hash of the vec_ids, so a crashed
-    * partial write is invisible to readers and the retry overwrites it in
-    * place; replaying an already-committed batch is detected and skipped
-    * (returns false — the pinned replay-no-op property).
+    * growing corpus would rebuild the whole index per ingest) — as one
+    * [[graft.sources.BatchStore]] batch: its rows bucket-partitioned under
+    * `data/` AND the centroids that bucketing used under `centroids/`. The
+    * batch id is a content hash over ids AND vectors, so a batch of
+    * modified embeddings under old ids is NEW content, not a replay: it
+    * appends, and the probe's max-combine surfaces the best-scoring stored
+    * version until a retrain compaction re-encodes from the corpus.
+    * Replaying a committed batch, or appending an empty one, writes
+    * nothing and returns false.
     *
     * Centroids travel WITH the batch so a probe is always consistent:
     * each batch's candidates come from probing that batch's own
@@ -478,79 +479,39 @@ object Similarity {
   def appendIvfIndex(spark: SparkSession, batch: DataFrame, path: String,
       cents: Array[Array[Float]], corpusAssign: Int = 3): Boolean = {
     require(cents.nonEmpty, "appendIvfIndex: no centroids")
-    val idRow = batch
-      // content hash over ids AND vectors (order-independent): a batch of
-      // modified embeddings under old ids is NEW content, not a replay —
-      // it appends, and the probe's max-combine surfaces the best-scoring
-      // stored version until a retrain compaction re-encodes from the
-      // corpus (the refresh story; the store itself is append-only).
-      // Combine per-row hashes with wrapping SUM, not bit_xor: xor cancels
-      // rows appearing an even number of times, so two different batches
-      // of doubled rows ([A,A] vs [B,B]) would collide on hash 0 and the
-      // second append would be silently dropped as a replay — structural
-      // data loss, not the ~2^-64 probabilistic collision the design
-      // accepts. Sum keeps every repeat's contribution.
-      // Hash-schema note: dirs written by the earlier id-only/xor hashes
-      // are still probed (committedDirs lists any committed dir), but
-      // re-appending one of those batches lands under a NEW name and
-      // duplicates it until compaction folds both — compact when migrating
-      // decimal(38,0) accumulator because ANSI mode makes a BIGINT sum
-      // throw on overflow; the driver wraps it back to 64 bits below
-      .agg(coalesce(sum(expr("xxhash64(vec_id, embedding)").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO)), count(lit(1)))
-      .collect()(0)
-    // an empty batch would commit a directory whose parquet reads fail
-    // schema inference — refuse it as "nothing appended"
-    if (idRow.getLong(1) == 0L) return false
-    val dir = f"$path/batches/b_${graft.sources.BatchStore.wrap64(idRow.getDecimal(0))}%016x_${idRow.getLong(1)}"
-    if (graft.sources.BatchStore.isCommitted(spark, dir)) return false
-    // r18: data + centroids land as CONCURRENT jobs (disjoint subdirs,
-    // the §2.6 overlap rule the corpus store already uses); _COMMIT goes
-    // strictly last, after both writes return, so atomicity is untouched.
-    graft.sources.BatchStore.runConcurrently(Seq(
-      () => batch.select(
-          col("vec_id"), col("embedding"),
-          Native.normF(col("embedding")).as("c_norm"),
-          explode(probeBuckets(col("embedding"), cents, corpusAssign)).as("bucket"))
-        // r18: the append pre-partitions by bucket after all. The r17 "no
-        // pre-partition for ingest latency" stance measured BACKWARDS: with
-        // an unsplit input the whole append ran as one task that created
-        // every bucket directory's file serially (~0.45 s per append at
-        // sf0.1), because file creation is per-output-unit work the shuffle
-        // width must match. The shuffled bytes (ids + vectors of ONE batch)
-        // are the cheap side; one writer per bucket is both the fast ingest
-        // and the compaction-friendly layout.
-        .repartition(bucketWriteWidth(spark, cents.length), col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/data"),
-      () => centroidsDf(spark, cents).coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/centroids")))
-    graft.sources.BatchStore.commit(spark, dir)
-    true
+    BatchStore.append(spark, path, BatchStore.contentId("b", batch, "vec_id", "embedding"),
+      ivfRelations(spark, batch, cents, corpusAssign))
   }
+
+  /** The relations of an IVF batch: `data` (each vector under its
+    * `corpusAssign` nearest buckets) and the `centroids` it was bucketed by. */
+  private def ivfRelations(spark: SparkSession, rows: DataFrame, cents: Array[Array[Float]],
+      corpusAssign: Int): Seq[BatchStore.Relation] = Seq(
+    "data" -> (() => rows.select(
+        col("vec_id"), col("embedding"),
+        Native.normF(col("embedding")).as("c_norm"),
+        explode(probeBuckets(col("embedding"), cents, corpusAssign)).as("bucket"))
+      // r18: the write pre-partitions by bucket. Unsplit, the whole append
+      // ran as one task that created every bucket directory's file
+      // serially (~0.45 s per append at sf0.1), because file creation is
+      // per-output-unit work the shuffle width must match. The shuffled
+      // bytes (ids + vectors of ONE batch) are the cheap side; one writer
+      // per bucket is both the fast ingest and the compaction-friendly
+      // layout.
+      .repartition(bucketWriteWidth(spark, cents.length), col("bucket"))
+      .write.partitionBy("bucket")),
+    "centroids" -> (() => centroidsDf(spark, cents).coalesce(1).write))
 
   /** Retract vectors from an incremental index (takedown of the source
     * documents' embeddings): appends a committed TOMBSTONE batch
-    * ([[graft.sources.BatchStore.appendTombstones]]). From that commit
-    * on, [[ivfTopKIncremental]]/[[ivfPqTopKIncremental]] anti-join the
-    * retracted vec_ids out of every candidate set (id-sized broadcast,
-    * skipped when no tombstones exist), and the next
+    * ([[BatchStore.appendTombstones]]). From that commit on,
+    * [[ivfTopKIncremental]]/[[ivfPqTopKIncremental]] anti-join the
+    * retracted vec_ids out of every candidate set, and the next
     * [[compactIvfIndex]]/[[compactIvfPqIndex]] makes the absence
     * PHYSICAL and consumes the tombstones. Returns false on an empty or
     * replayed retraction set. */
   def retractVectors(spark: SparkSession, path: String, vecIds: DataFrame): Boolean =
-    graft.sources.BatchStore.appendTombstones(spark, path, vecIds)
-
-  /** Committed retracted vec_ids of an index, as a `vec_id` relation. */
-  private def indexTombstones(spark: SparkSession, path: String): DataFrame =
-    graft.sources.BatchStore.readTombstones(spark, path)
-      .select(col("id").as("vec_id"))
-
-  /** Anti-join committed retractions out of a (…, vec_id, …) relation;
-    * identity when the index carries no tombstone batch. */
-  private def dropRetracted(spark: SparkSession, path: String, dirs: Seq[String],
-      rel: DataFrame): DataFrame =
-    if (graft.sources.BatchStore.dirsWithRelation(spark, dirs, "tomb").isEmpty) rel
-    else rel.join(indexTombstones(spark, path), Seq("vec_id"), "left_anti")
+    BatchStore.appendTombstones(spark, path, vecIds)
 
   /** Probe an incremental IVF index: per committed batch, probe THAT
     * batch's centroids with static partition pruning (the shared
@@ -563,10 +524,14 @@ object Similarity {
     * golden-pinned); the per-batch scan-node count is the documented
     * compaction motive, same as the corpus store's. */
   def ivfTopKIncremental(spark: SparkSession, queries: DataFrame, path: String,
-      k: Int, nprobe: Int): DataFrame = {
-    val dirs = graft.sources.BatchStore.committedDirs(spark, path)
-    val dataDirs = graft.sources.BatchStore.dirsWithRelation(spark, dirs, "data")
-    require(dataDirs.nonEmpty, s"no committed index batches under $path/batches")
+      k: Int, nprobe: Int): DataFrame =
+    ivfTopKIncremental(spark, queries, BatchStore.snapshot(spark, path), k, nprobe)
+
+  /** [[ivfTopKIncremental]] over one index snapshot. */
+  private[graft] def ivfTopKIncremental(spark: SparkSession, queries: DataFrame,
+      index: BatchStore.Snapshot, k: Int, nprobe: Int): DataFrame = {
+    val dataDirs = index.dataDirs
+    require(dataDirs.nonEmpty, s"no committed index batches under ${index.root}/batches")
     // r18: batches sharing centroids probe as ONE multi-root scan — the
     // probe set, the partition filter, and the broadcast query side are
     // functions of the centroids alone, so per-batch scans only exist to
@@ -588,7 +553,7 @@ object Similarity {
     // or re-ingested under a different stored version) must combine
     // DETERMINISTICALLY — an arbitrary pick would make the ranking
     // depend on task scheduling. Same shuffle as a dropDuplicates.
-    topK(dropRetracted(spark, path, dirs, scored)
+    topK(index.live(scored, col("vec_id"))
       .groupBy("query_id", "vec_id").agg(max(col("sim")).as("sim")), k)
   }
 
@@ -597,67 +562,34 @@ object Similarity {
     * keeps probes at one scan per index regardless of ingest cadence, and
     * the explicit home of centroid refresh (drifting data slowly degrades
     * recall under frozen centroids; re-training on every append would
-    * rebucket the whole index per batch). Crash safety is the store
-    * protocol's supersession rule: the compacted directory (deterministic
-    * name from the sorted source list) writes its `_COMPACTED_FROM`
-    * manifest before its `_COMMIT`, so one marker create atomically swaps
-    * the sources for their union; `gc` deletion afterwards is garbage
-    * collection. Multi-assigned rows collapse back to unique vectors
-    * before re-bucketing (otherwise each compaction would multiply the
-    * index by corpusAssign).
+    * rebucket the whole index per batch). A [[BatchStore.compact]]:
+    * retracted vec_ids drop physically and their tombstones are consumed.
+    * Multi-assigned rows collapse back to unique vectors before
+    * re-bucketing (otherwise each compaction would multiply the index by
+    * corpusAssign).
     *
     * Returns the number of source batches folded (0 = nothing to do). */
   def compactIvfIndex(spark: SparkSession, path: String,
       retrainCentroids: Option[Int] = None, kmeansIters: Int = 3,
-      corpusAssign: Int = 3, gc: Boolean = true): Int = {
-    val all = graft.sources.BatchStore.committedDirs(spark, path)
-    // retraction batches fold IN: their vec_ids drop physically from the
-    // compacted data and the consumed tombstone dirs are deleted outright
-    // (not superseded — a crash before that GC leaves them harmlessly
-    // re-filtering already-absent ids)
-    val (tombDirs, sources) =
-      all.partition(p => graft.sources.BatchStore.hasRelation(spark, p, "tomb"))
-    // empty store: nothing to fold OR retrain over (a retrain request on an
-    // empty store would otherwise die in an opaque empty.reduce)
-    if (sources.isEmpty ||
-      (sources.length <= 1 && retrainCentroids.isEmpty && tombDirs.isEmpty)) return 0
-    val names = sources.map(p => new org.apache.hadoop.fs.Path(p).getName).sorted
-    val cid = java.security.MessageDigest.getInstance("MD5")
-      .digest(names.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = s"$path/batches/c_$cid"
-    val rows = dropRetracted(spark, path, all,
-        sources.map(p => spark.read.schema(IvfBatchSchema).parquet(s"$p/data"))
-          .reduce(_.unionByName(_)))
-      .select("vec_id", "embedding")
-      // max, not dropDuplicates: a vector re-ingested with a modified
-      // embedding exists in several stored versions; the fold must pick
-      // ONE deterministically (arrays order lexicographically) or the
-      // compacted index would vary with task scheduling — the probe-side
-      // max-combine stance applied at rest
-      .groupBy("vec_id").agg(max(col("embedding")).as("embedding"))
-    val cents = retrainCentroids match {
-      case Some(c) => trainCentroids(rows, "vec_id", "embedding", c, kmeansIters)
-      case None => readIndexCentroids(spark, s"${sources.head}/centroids")
+      corpusAssign: Int = 3, gc: Boolean = true): Int =
+    BatchStore.compact(spark, path, gc, force = retrainCentroids.nonEmpty) { index =>
+      val sources = index.dataDirs
+      val rows = index.live(
+          sources.map(p => spark.read.schema(IvfBatchSchema).parquet(s"$p/data"))
+            .reduce(_.unionByName(_)), col("vec_id"))
+        .select("vec_id", "embedding")
+        // max, not dropDuplicates: a vector re-ingested with a modified
+        // embedding exists in several stored versions; the fold must pick
+        // ONE deterministically (arrays order lexicographically) or the
+        // compacted index would vary with task scheduling — the probe-side
+        // max-combine stance applied at rest
+        .groupBy("vec_id").agg(max(col("embedding")).as("embedding"))
+      val cents = retrainCentroids match {
+        case Some(c) => trainCentroids(rows, "vec_id", "embedding", c, kmeansIters)
+        case None => readIndexCentroids(spark, s"${sources.head}/centroids")
+      }
+      ivfRelations(spark, rows, cents, corpusAssign)
     }
-    // r18: data + centroids overlap as concurrent jobs (see appendIvfIndex);
-    // the supersession manifest and _COMMIT stay strictly after both.
-    graft.sources.BatchStore.runConcurrently(Seq(
-      () => rows.select(
-          col("vec_id"), col("embedding"),
-          Native.normF(col("embedding")).as("c_norm"),
-          explode(probeBuckets(col("embedding"), cents, corpusAssign)).as("bucket"))
-        // one writer per bucket dir, explicit width (see writeIvfIndex)
-        .repartition(bucketWriteWidth(spark, cents.length), col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/data"),
-      () => centroidsDf(spark, cents).coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/centroids")))
-    graft.sources.BatchStore.writeSupersedes(spark, dir, names)
-    graft.sources.BatchStore.commit(spark, dir)
-    graft.sources.BatchStore.delete(spark, tombDirs) // consumed — absence is physical now
-    if (gc) graft.sources.BatchStore.delete(spark, sources)
-    sources.length
-  }
 
   // ---------------------------------------------------------------------
   // Product quantization (PQ) — the memory-bounded ANN tier
@@ -875,55 +807,31 @@ object Similarity {
     * compressed sibling of [[appendIvfIndex]]: rows land PQ-ENCODED (m
     * bytes of payload, never floats) and bucket-partitioned, with the
     * batch's coarse centroids AND codebooks persisted alongside so every
-    * probe is quantizer-consistent per batch. Same `_COMMIT` protocol,
-    * same content-hash replay no-op. Quantizer re-train is compaction's
+    * probe is quantizer-consistent per batch. Same batch protocol and
+    * content id, same replay no-op. Quantizer re-train is compaction's
     * job and needs the corpus (codes are not invertible) — see
     * [[compactIvfPqIndex]]. */
   def appendIvfPqIndex(spark: SparkSession, batch: DataFrame, path: String,
       cents: Array[Array[Float]], codebooks: Array[Array[Array[Float]]],
       corpusAssign: Int = 3): Boolean = {
     require(cents.nonEmpty, "appendIvfPqIndex: no centroids")
-    val idRow = batch
-      // content hash over ids AND vectors (order-independent): a batch of
-      // modified embeddings under old ids is NEW content, not a replay —
-      // it appends, and the probe's max-combine surfaces the best-scoring
-      // stored version until a retrain compaction re-encodes from the
-      // corpus (the refresh story; the store itself is append-only).
-      // Combine per-row hashes with wrapping SUM, not bit_xor: xor cancels
-      // rows appearing an even number of times, so two different batches
-      // of doubled rows ([A,A] vs [B,B]) would collide on hash 0 and the
-      // second append would be silently dropped as a replay — structural
-      // data loss, not the ~2^-64 probabilistic collision the design
-      // accepts. Sum keeps every repeat's contribution.
-      // Hash-schema note: dirs written by the earlier id-only/xor hashes
-      // are still probed (committedDirs lists any committed dir), but
-      // re-appending one of those batches lands under a NEW name and
-      // duplicates it until compaction folds both — compact when migrating
-      // decimal(38,0) accumulator because ANSI mode makes a BIGINT sum
-      // throw on overflow; the driver wraps it back to 64 bits below
-      .agg(coalesce(sum(expr("xxhash64(vec_id, embedding)").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO)), count(lit(1)))
-      .collect()(0)
-    if (idRow.getLong(1) == 0L) return false // empty batch: nothing appended
-    val dir = f"$path/batches/b_${graft.sources.BatchStore.wrap64(idRow.getDecimal(0))}%016x_${idRow.getLong(1)}"
-    if (graft.sources.BatchStore.isCommitted(spark, dir)) return false
-    // r18: the three relation writes overlap as concurrent jobs (disjoint
-    // subdirs — see appendIvfIndex); _COMMIT strictly last.
-    graft.sources.BatchStore.runConcurrently(Seq(
-      () => batch.select(col("vec_id"),
-          pqCodes(col("embedding"), codebooks).as("codes"),
-          explode(probeBuckets(col("embedding"), cents, corpusAssign)).as("bucket"))
-        // r18: one writer per bucket dir (see appendIvfIndex — the no-pre-
-        // partition append serialized every bucket file into one task)
-        .repartition(bucketWriteWidth(spark, cents.length), col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/data"),
-      () => centroidsDf(spark, cents).coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/centroids"),
-      () => codebooksDf(spark, codebooks).coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/codebooks")))
-    graft.sources.BatchStore.commit(spark, dir)
-    true
+    BatchStore.append(spark, path, BatchStore.contentId("b", batch, "vec_id", "embedding"),
+      pqRelations(spark, batch.select(col("vec_id"),
+        pqCodes(col("embedding"), codebooks).as("codes"),
+        explode(probeBuckets(col("embedding"), cents, corpusAssign)).as("bucket")),
+        cents, codebooks))
   }
+
+  /** The relations of an IVF-PQ batch: `coded` rows (vec_id, codes,
+    * bucket) as `data`, one writer per bucket dir (see [[appendIvfIndex]]),
+    * and the quantizers that coded them. */
+  private def pqRelations(spark: SparkSession, coded: DataFrame, cents: Array[Array[Float]],
+      codebooks: Array[Array[Array[Float]]]): Seq[BatchStore.Relation] = Seq(
+    "data" -> (() => coded
+      .repartition(bucketWriteWidth(spark, cents.length), col("bucket"))
+      .write.partitionBy("bucket")),
+    "centroids" -> (() => centroidsDf(spark, cents).coalesce(1).write),
+    "codebooks" -> (() => codebooksDf(spark, codebooks).coalesce(1).write))
 
   /** Probe an incremental IVF-PQ index: per committed batch, ADC over
     * codes with that batch's own quantizers and static partition pruning
@@ -934,8 +842,8 @@ object Similarity {
     * set equals the single-index build's exactly (golden-pinned). */
   def ivfPqTopKIncremental(spark: SparkSession, queries: DataFrame, path: String,
       corpus: DataFrame, k: Int, nprobe: Int, refineFactor: Int = 4): DataFrame = {
-    val dirs = graft.sources.BatchStore.committedDirs(spark, path)
-    val dataDirs = graft.sources.BatchStore.dirsWithRelation(spark, dirs, "data")
+    val index = BatchStore.snapshot(spark, path)
+    val dataDirs = index.dataDirs
     require(dataDirs.nonEmpty, s"no committed index batches under $path/batches")
     // r18: same quantizer-grouping as ivfTopKIncremental — batches sharing
     // (centroids, codebooks) ADC-score as one multi-root scan; the
@@ -959,7 +867,7 @@ object Similarity {
     // Retractions drop BEFORE the shortlist so a tombstoned vector can
     // never crowd a live one out of the k·refineFactor re-rank set.
     val shortlist = topK(
-      dropRetracted(spark, path, dirs, scored)
+      index.live(scored, col("vec_id"))
         .groupBy("query_id", "vec_id").agg(max(col("sim")).as("sim")),
       k * refineFactor).select(col("query_id"), col("vec_id"))
     exactRerank(shortlist, corpus, queries, k)
@@ -997,83 +905,50 @@ object Similarity {
     * corpus-by-id contract as [[ivfPqTopK]]'s refine step). Without
     * retrain the fold copies rows verbatim under the head batch's
     * quantizers, which requires every source to share them — enforced by
-    * comparing the persisted quantizer relations, not assumed. Crash
-    * safety = the store protocol's supersession rule. */
+    * comparing the persisted quantizer relations, not assumed. A
+    * [[BatchStore.compact]], like [[compactIvfIndex]]. */
   def compactIvfPqIndex(spark: SparkSession, path: String,
       corpus: Option[DataFrame] = None, retrainCentroids: Option[Int] = None,
       pqM: Int = 8, kmeansIters: Int = 3, corpusAssign: Int = 3,
-      gc: Boolean = true): Int = {
-    val all = graft.sources.BatchStore.committedDirs(spark, path)
-    // retractions fold in physically, tombstones consumed (see compactIvfIndex)
-    val (tombDirs, sources) =
-      all.partition(p => graft.sources.BatchStore.hasRelation(spark, p, "tomb"))
-    // empty store: nothing to fold or retrain (see compactIvfIndex)
-    if (sources.isEmpty ||
-      (sources.length <= 1 && retrainCentroids.isEmpty && tombDirs.isEmpty)) return 0
-    val names = sources.map(p => new org.apache.hadoop.fs.Path(p).getName).sorted
-    val cid = java.security.MessageDigest.getInstance("MD5")
-      .digest(names.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = s"$path/batches/c_$cid"
-    retrainCentroids match {
-      case Some(c) =>
-        val emb = corpus.getOrElse(throw new IllegalArgumentException(
-          "compactIvfPqIndex: quantizer re-train needs the corpus (codes are not invertible)"))
-        val ids = dropRetracted(spark, path, all,
-          sources.map(p =>
-              spark.read.schema(PqBatchSchema).parquet(s"$p/data").select("vec_id"))
-            .reduce(_.unionByName(_))).distinct()
-        val rows = emb.join(ids, Seq("vec_id"))
-        val cents = trainCentroids(rows, "vec_id", "embedding", c, kmeansIters)
-        val cbs = trainPqCodebooks(rows, "vec_id", "embedding", pqM)
-        // r18: three concurrent relation writes (see appendIvfPqIndex)
-        graft.sources.BatchStore.runConcurrently(Seq(
-          () => rows.select(col("vec_id"),
-              pqCodes(col("embedding"), cbs).as("codes"),
-              explode(probeBuckets(col("embedding"), cents, corpusAssign)).as("bucket"))
-            .repartition(bucketWriteWidth(spark, cents.length), col("bucket"))
-            .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/data"),
-          () => centroidsDf(spark, cents).coalesce(1)
-            .write.mode("overwrite").parquet(s"$dir/centroids"),
-          () => codebooksDf(spark, cbs).coalesce(1)
-            .write.mode("overwrite").parquet(s"$dir/codebooks")))
-      case None =>
-        // verbatim fold is only sound under ONE quantizer pair — check it
-        // (one multi-root read per relation, not one per source — r18)
-        val centsAll = readIndexCentroidsAll(spark, sources.map(p => s"$p/centroids"))
-        val cbsAll = readIndexCodebooksAll(spark, sources.map(p => s"$p/codebooks"))
-        val headC = centsAll(s"${sources.head}/centroids")
-        val headB = cbsAll(s"${sources.head}/codebooks")
-        sources.tail.foreach { p =>
-          require(centsAll(s"$p/centroids").map(_.toSeq).toSeq
-              == headC.map(_.toSeq).toSeq &&
-            cbsAll(s"$p/codebooks").map(_.map(_.toSeq).toSeq).toSeq
-              == headB.map(_.map(_.toSeq).toSeq).toSeq,
-            s"compactIvfPqIndex: $p was appended under different quantizers - " +
-              "pass the corpus and retrainCentroids to re-encode")
-        }
-        // r18: three concurrent relation writes (see appendIvfPqIndex)
-        graft.sources.BatchStore.runConcurrently(Seq(
-          () => dropRetracted(spark, path, all,
-              sources.map(p => spark.read.schema(PqBatchSchema).parquet(s"$p/data"))
-                .reduce(_.unionByName(_)))
-            // max per (vec_id, bucket), not dropDuplicates: re-ingested
-            // versions of a vector fold to a deterministic pick instead of
-            // a task-scheduling-dependent one (see compactIvfIndex)
-            .groupBy("vec_id", "bucket").agg(max(col("codes")).as("codes"))
-            .repartition(bucketWriteWidth(spark, headC.length), col("bucket"))
-            .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/data"),
-          () => centroidsDf(spark, headC).coalesce(1)
-            .write.mode("overwrite").parquet(s"$dir/centroids"),
-          () => codebooksDf(spark, headB).coalesce(1)
-            .write.mode("overwrite").parquet(s"$dir/codebooks")))
+      gc: Boolean = true): Int =
+    BatchStore.compact(spark, path, gc, force = retrainCentroids.nonEmpty) { index =>
+      val sources = index.dataDirs
+      val stored = index.live(
+        sources.map(p => spark.read.schema(PqBatchSchema).parquet(s"$p/data"))
+          .reduce(_.unionByName(_)), col("vec_id"))
+      retrainCentroids match {
+        case Some(c) =>
+          val emb = corpus.getOrElse(throw new IllegalArgumentException(
+            "compactIvfPqIndex: quantizer re-train needs the corpus (codes are not invertible)"))
+          val rows = emb.join(stored.select("vec_id").distinct(), Seq("vec_id"))
+          val cents = trainCentroids(rows, "vec_id", "embedding", c, kmeansIters)
+          val cbs = trainPqCodebooks(rows, "vec_id", "embedding", pqM)
+          pqRelations(spark, rows.select(col("vec_id"),
+            pqCodes(col("embedding"), cbs).as("codes"),
+            explode(probeBuckets(col("embedding"), cents, corpusAssign)).as("bucket")),
+            cents, cbs)
+        case None =>
+          // verbatim fold is only sound under ONE quantizer pair — check it
+          // (one multi-root read per relation, not one per source — r18)
+          val centsAll = readIndexCentroidsAll(spark, sources.map(p => s"$p/centroids"))
+          val cbsAll = readIndexCodebooksAll(spark, sources.map(p => s"$p/codebooks"))
+          val headC = centsAll(s"${sources.head}/centroids")
+          val headB = cbsAll(s"${sources.head}/codebooks")
+          sources.tail.foreach { p =>
+            require(centsAll(s"$p/centroids").map(_.toSeq).toSeq
+                == headC.map(_.toSeq).toSeq &&
+              cbsAll(s"$p/codebooks").map(_.map(_.toSeq).toSeq).toSeq
+                == headB.map(_.map(_.toSeq).toSeq).toSeq,
+              s"compactIvfPqIndex: $p was appended under different quantizers - " +
+                "pass the corpus and retrainCentroids to re-encode")
+          }
+          // max per (vec_id, bucket), not dropDuplicates: re-ingested
+          // versions of a vector fold to a deterministic pick instead of a
+          // task-scheduling-dependent one (see compactIvfIndex)
+          pqRelations(spark, stored.groupBy("vec_id", "bucket").agg(max(col("codes")).as("codes")),
+            headC, headB)
+      }
     }
-    graft.sources.BatchStore.writeSupersedes(spark, dir, names)
-    graft.sources.BatchStore.commit(spark, dir)
-    graft.sources.BatchStore.delete(spark, tombDirs) // consumed — absence is physical now
-    if (gc) graft.sources.BatchStore.delete(spark, sources)
-    sources.length
-  }
 
   /** IVF-PQ probe: queries probe their `nprobe` coarse buckets with
     * STATIC partition pruning (the [[ivfTopKIndexed]] contract — the
